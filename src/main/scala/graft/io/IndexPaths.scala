@@ -9,15 +9,15 @@ package graft.io
   * value shared JVM-wide, so (a) two different source dirs could
   * collide onto one index, and (b) regenerating the data UNDER a dir
   * inside a long-lived session silently reused the stale index. The
-  * key here is an md5 over the FULL source path, the builder's
-  * parameters, and a file fingerprint (relative name, byte size,
-  * mtime of every data file), so any of those changing yields a fresh
-  * path — the build-once memos in `Dedup.ensureBandIndex` /
-  * `Similarity.ivfTopKIndexed` then rebuild because the PATH is new,
-  * no explicit invalidation needed for the common cases. Explicit
-  * hooks exist for the rest (e.g. deleting an index dir out from
-  * under a running session): [[graft.operators.Dedup.invalidateBandIndex]]
-  * and [[graft.operators.Similarity.invalidateIvfIndex]].
+  * key here is an md5 over the FULL qualified source path, the
+  * builder's parameters, and a file fingerprint (relative name, byte
+  * size, mtime of every data file), so any of those changing yields a
+  * fresh path, which [[StoredIndex]] then builds. The source is
+  * qualified, listed and stat'ed through the active session's Hadoop
+  * `FileSystem`, so non-local sources (hdfs, s3a, viewfs…) fingerprint
+  * their content exactly like local ones. Deleting or tearing an index
+  * dir needs no hook either: [[StoredIndex]] checks the commit markers
+  * on every call.
   *
   * Root directory: `graft.index.root` system property, else the JVM
   * temp dir.
@@ -27,18 +27,29 @@ object IndexPaths {
   def root: String =
     sys.props.getOrElse("graft.index.root", sys.props("java.io.tmpdir"))
 
+  /** Hadoop configuration of the active (else default) session — the
+    * one [[complete]] and the index writers resolve paths through. */
+  private def hadoopConf: org.apache.hadoop.conf.Configuration =
+    org.apache.spark.sql.SparkSession.getActiveSession
+      .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
+      .map(_.sparkContext.hadoopConfiguration)
+      .getOrElse(new org.apache.hadoop.conf.Configuration())
+
   /** Stable fingerprint of a data file or directory-of-files: every
     * data file's (relative name, length, mtime). Missing source → "-",
     * so the path is still deterministic (the builder will fail loudly
     * on read instead). */
-  def fingerprint(source: java.io.File): String = {
-    if (!source.exists()) "-"
+  def fingerprint(source: org.apache.hadoop.fs.Path): String = {
+    val fs = source.getFileSystem(hadoopConf)
+    if (!fs.exists(source)) "-"
     else {
+      val st = fs.getFileStatus(source)
       val files =
-        if (source.isFile) Seq(source)
-        else Option(source.listFiles()).getOrElse(Array.empty)
-          .filter(_.isFile).sortBy(_.getName).toSeq
-      files.map(f => s"${f.getName}:${f.length}:${f.lastModified}")
+        if (st.isFile) Seq(st)
+        else fs.listStatus(source).toSeq.filter(_.isFile)
+          .sortBy(_.getPath.getName)
+      files.map(f =>
+        s"${f.getPath.getName}:${f.getLen}:${f.getModificationTime}")
         .mkString(",")
     }
   }
@@ -63,10 +74,11 @@ object IndexPaths {
     * source file/dir at `sourcePath` and the builder parameter string.
     */
   def indexPath(kind: String, sourcePath: String, params: String): String = {
+    val src = new org.apache.hadoop.fs.Path(sourcePath)
     val key = md5Hex(Seq(
-      new java.io.File(sourcePath).getAbsolutePath,
+      src.getFileSystem(hadoopConf).makeQualified(src).toString,
       params,
-      fingerprint(new java.io.File(sourcePath))).mkString("|"))
+      fingerprint(src)).mkString("|"))
     s"$root/graft_${kind}_$key"
   }
 }

@@ -592,25 +592,14 @@ object Dedup {
       .write.mode("append").parquet(path + ".gsets")
   }
 
-  private val containmentIndexes =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
-
-  /** Build-once memo around [[writeContainmentIndex]]; committed
-    * on-disk indexes (`_SUCCESS` on both tables) are reused across
-    * JVMs, torn dirs rebuild — same contract as [[ensureBandIndex]]. */
+  /** Build-once [[writeContainmentIndex]] through
+    * [[graft.io.StoredIndex]] (the postings and their `.gsets` sibling
+    * both gate). */
   def ensureContainmentIndex(docs: => DataFrame, idCol: String,
       textCol: String, path: String, ngram: Int = 3): Unit =
-    containmentIndexes.computeIfAbsent(path, { _ =>
-      val spark = org.apache.spark.sql.SparkSession.active
-      if (!graft.io.IndexPaths.complete(spark, path) ||
-          !graft.io.IndexPaths.complete(spark, path + ".gsets"))
-        writeContainmentIndex(docs, idCol, textCol, path, ngram)
-      java.lang.Boolean.TRUE
-    })
-
-  /** Drop the build-once memo for `path` (cf. [[invalidateBandIndex]]). */
-  def invalidateContainmentIndex(path: String): Unit =
-    containmentIndexes.remove(path)
+    graft.io.StoredIndex.ensure(org.apache.spark.sql.SparkSession.active,
+      path, path + ".gsets")(
+      writeContainmentIndex(docs, idCol, textCol, path, ngram))
 
   /** Incremental containment join — the production ingest shape (cf.
     * [[incrementalDedupPairs]]): a NEW batch is matched against an
@@ -807,32 +796,14 @@ object Dedup {
     } finally stored.unpersist()
   }
 
-  private val bandIndexes =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
-
-  /** Build-once memo around [[writeBandIndex]] (same lifecycle as the
-    * IVF index: an ingest job builds, queries only read). A fresh JVM
-    * REUSES a committed on-disk index (`_SUCCESS` present) instead of
-    * rebuilding — content-addressed paths ([[graft.io.IndexPaths]])
-    * guarantee it still describes the current source; a torn dir from
-    * a killed build (no `_SUCCESS`) reads as absent and is rebuilt
-    * with an overwrite. */
+  /** Build-once [[writeBandIndex]] through [[graft.io.StoredIndex]]
+    * (an ingest job builds, queries only read). */
   def ensureBandIndex(docs: => DataFrame, idCol: String, textCol: String,
       path: String, ngram: Int = 3, numHashes: Int = 64,
       bands: Int = 16): Unit =
-    bandIndexes.computeIfAbsent(path, { _ =>
-      val spark = org.apache.spark.sql.SparkSession.active
-      if (!graft.io.IndexPaths.complete(spark, path))
-        writeBandIndex(docs, idCol, textCol, path, ngram, numHashes, bands)
-      java.lang.Boolean.TRUE
-    })
-
-  /** Drop the build-once memo for `path` so the next
-    * [[ensureBandIndex]] rebuilds (e.g. after deleting the index dir
-    * mid-session). Content-addressed paths ([[graft.io.IndexPaths]])
-    * make this unnecessary for source changes — a changed source IS a
-    * new path. */
-  def invalidateBandIndex(path: String): Unit = bandIndexes.remove(path)
+    graft.io.StoredIndex.ensure(org.apache.spark.sql.SparkSession.active,
+      path)(writeBandIndex(docs, idCol, textCol, path, ngram, numHashes,
+        bands))
 
   /** Incremental near-dup detection — the production dedup shape: a NEW
     * batch (daily ingest) is matched against an EXISTING corpus through
@@ -1221,15 +1192,11 @@ object Dedup {
     * ARRIVAL (the hot-bucket cap keeps the earliest-ingested members),
     * a rebuild ranks by id (the cap keeps the smallest ids) — both are
     * valid deterministic guard contracts, but a rebuild mid-stream
-    * changes WHICH corpus docs occupy a hot bucket's cap slots.
-    * Refreshes the build-once memo so in-session queries see the
-    * rebuilt index. */
+    * changes WHICH corpus docs occupy a hot bucket's cap slots. */
   def rebuildBandIndex(docs: DataFrame, path: String, idCol: String,
       textCol: String, ngram: Int = 3, numHashes: Int = 64,
-      bands: Int = 16): Unit = {
+      bands: Int = 16): Unit =
     writeBandIndex(docs, idCol, textCol, path, ngram, numHashes, bands)
-    bandIndexes.put(path, java.lang.Boolean.TRUE)
-  }
 
   /** Full containment-index rebuild from the current corpus — the
     * restore for [[appendToContainmentIndex]]'s documented drift:
@@ -1238,14 +1205,11 @@ object Dedup {
     * the global rarest-first selectivity, and candidate counts creep
     * up as batches accrete. One [[writeContainmentIndex]] pass restores
     * global-df rank order and one-directory layout for both the
-    * postings and the gram-set sibling; the build-once memo is
-    * refreshed. Same cadence trade as [[appendToIvfIndex]] centroid
+    * postings and the gram-set sibling. Same cadence trade as [[appendToIvfIndex]] centroid
     * drift: append cheaply per batch, rebuild periodically. */
   def rebuildContainmentIndex(docs: DataFrame, path: String,
-      idCol: String, textCol: String, ngram: Int = 3): Unit = {
+      idCol: String, textCol: String, ngram: Int = 3): Unit =
     writeContainmentIndex(docs, idCol, textCol, path, ngram)
-    containmentIndexes.put(path, java.lang.Boolean.TRUE)
-  }
 
   /** REBUILD ALARM for the containment index (cf.
     * [[graft.operators.Retrieval.bm25IndexDrift]]): gram-frequency
@@ -1786,21 +1750,11 @@ object Dedup {
       .write.mode("overwrite").parquet(path)
   }
 
-  private val winnowIndexes =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
-
-  /** Build-once memo around [[writeWinnowIndex]] — the
-    * [[ensureBandIndex]] lifecycle (`_SUCCESS`-gated, torn builds
-    * re-run, content-addressed paths make invalidation unnecessary
-    * for source changes). */
+  /** Build-once [[writeWinnowIndex]] through [[graft.io.StoredIndex]]. */
   def ensureWinnowIndex(docs: => DataFrame, idCol: String,
       textCol: String, path: String, k: Int = 5, w: Int = 4): Unit =
-    winnowIndexes.computeIfAbsent(path, { _ =>
-      val spark = org.apache.spark.sql.SparkSession.active
-      if (!graft.io.IndexPaths.complete(spark, path))
-        writeWinnowIndex(docs, idCol, textCol, path, k, w)
-      java.lang.Boolean.TRUE
-    })
+    graft.io.StoredIndex.ensure(org.apache.spark.sql.SparkSession.active,
+      path)(writeWinnowIndex(docs, idCol, textCol, path, k, w))
 
   /** Copy-suspect pairs of an ingest batch against the stored winnow
     * index (plus the batch's internal pairs): fingerprint ONLY the

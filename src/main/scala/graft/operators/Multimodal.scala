@@ -667,19 +667,12 @@ object Multimodal {
     if (!fresh.isEmpty) fresh.coalesce(4).write.mode("append").parquet(path)
   }
 
-  private val codeIndexes =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
-
-  /** Build-once memo around [[writeCodeIndex]] (the ensureSignIndex
-    * contract: `_SUCCESS`-gated, torn builds re-run, content-addressed
-    * paths). `codes` is by-name — never computed on the warm path. */
+  /** Build-once [[writeCodeIndex]] through [[graft.io.StoredIndex]].
+    * `codes` is by-name — never computed on the warm path. */
   def ensureCodeIndex(spark: org.apache.spark.sql.SparkSession,
       codes: => DataFrame, path: String, coalesceTo: Int = 8): Unit =
-    codeIndexes.computeIfAbsent(path, { _ =>
-      if (!graft.io.IndexPaths.complete(spark, path))
-        writeCodeIndex(codes, path, coalesceTo)
-      java.lang.Boolean.TRUE
-    })
+    graft.io.StoredIndex.ensure(spark, path)(
+      writeCodeIndex(codes, path, coalesceTo))
 
   /** Near-dup pairs off the STORED code table: the corpus enters as
     * 8-byte codes — no payload is decoded or fingerprinted at query
@@ -741,19 +734,12 @@ object Multimodal {
     if (!fresh.isEmpty) fresh.coalesce(4).write.mode("append").parquet(path)
   }
 
-  private val frameIndexes =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
-
-  /** Build-once memo around [[writeFrameIndex]] (the ensureCodeIndex
-    * contract: `_SUCCESS`-gated, torn builds re-run, content-addressed
-    * paths). `frames` is by-name — never computed on the warm path. */
+  /** Build-once [[writeFrameIndex]] through [[graft.io.StoredIndex]].
+    * `frames` is by-name — never computed on the warm path. */
   def ensureFrameIndex(spark: org.apache.spark.sql.SparkSession,
       frames: => DataFrame, path: String, coalesceTo: Int = 8): Unit =
-    frameIndexes.computeIfAbsent(path, { _ =>
-      if (!graft.io.IndexPaths.complete(spark, path))
-        writeFrameIndex(frames, path, coalesceTo)
-      java.lang.Boolean.TRUE
-    })
+    graft.io.StoredIndex.ensure(spark, path)(
+      writeFrameIndex(frames, path, coalesceTo))
 
   /** Video near-dup pairs off the STORED frame table: the corpus
     * enters as (doc_id, fh) rows — no payload is framed or hashed at
@@ -1264,23 +1250,14 @@ object Multimodal {
     graft.io.Compaction.foldBatches(spark, path, targetFiles,
       keepLast)(identity)
 
-  private val chunkIndexes =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
-
-  /** Build-once memo for the chunk manifest (the ensureCardIndex
-    * lifecycle; folded-manifest-aware). `build` receives the ids that
-    * are genuinely MISSING — neither a complete batch dir nor recorded
-    * as folded — so a partial rebuild after `batchIds` grows past a
-    * compaction writes only the new batches and never re-creates (and
-    * double-counts) already-folded ones. */
+  /** Build-once chunk manifest through
+    * [[graft.io.StoredIndex.ensureBatches]]: `build` receives only the
+    * genuinely missing batch ids, so a rebuild after `batchIds` grows
+    * past a compaction never re-creates (and double-counts)
+    * already-folded ones. */
   def ensureChunkIndex(spark: org.apache.spark.sql.SparkSession,
       path: String, batchIds: Seq[Long])(build: Seq[Long] => Unit): Unit =
-    chunkIndexes.computeIfAbsent(path, { _ =>
-      val missing = batchIds.filterNot(id =>
-        graft.io.Compaction.batchComplete(spark, path, id))
-      if (missing.nonEmpty) build(missing)
-      java.lang.Boolean.TRUE
-    })
+    graft.io.StoredIndex.ensureBatches(spark, path, Nil, batchIds)(build)
 
   /** Materialize the corpus CDC chunk-hash store — one row per
     * DISTINCT (media_type, h) with the chunk length: the membership
@@ -1296,19 +1273,11 @@ object Multimodal {
       .write.mode("overwrite").parquet(path)
   }
 
-  private val cdcIndexes =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
-
-  /** Build-once memo around [[writeCdcIndex]] (the ensureBandIndex
-    * lifecycle). */
+  /** Build-once [[writeCdcIndex]] through [[graft.io.StoredIndex]]. */
   def ensureCdcIndex(media: => DataFrame, path: String, w: Int = 4,
       modulus: Int = 64, minLen: Int = 16, family: String = "md5"): Unit =
-    cdcIndexes.computeIfAbsent(path, { _ =>
-      val spark = org.apache.spark.sql.SparkSession.active
-      if (!graft.io.IndexPaths.complete(spark, path))
-        writeCdcIndex(media, path, w, modulus, minLen, family = family)
-      java.lang.Boolean.TRUE
-    })
+    graft.io.StoredIndex.ensure(org.apache.spark.sql.SparkSession.active,
+      path)(writeCdcIndex(media, path, w, modulus, minLen, family = family))
 
   /** Dedup-on-arrival audit of an ingest batch against the stored
     * chunk store: chunk ONLY the batch, probe the store by hash

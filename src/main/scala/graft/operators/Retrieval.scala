@@ -161,30 +161,17 @@ object Retrieval {
     stats.coalesce(1).write.mode("overwrite").parquet(path + ".stats")
   }
 
-  private val bm25Indexes =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
-
-  /** Drop the build-once memo for `path` (cf.
-    * [[Dedup.invalidateContainmentIndex]]). */
-  def invalidateBm25Index(path: String): Unit = bm25Indexes.remove(path)
-
-  /** BM25 top-k through the materialized index: build-once memoized
-    * ([[graft.io.IndexPaths.complete]] commit markers, torn dirs
-    * rebuild), then every query-set evaluation is ONE postings read +
-    * the broadcast-match scoring pass — the corpus text is never
-    * re-tokenized at query time. */
-  /** Build-once memo around [[writeBm25Index]] (committed on-disk
-    * indexes reused across JVMs, torn dirs rebuild — the
-    * [[Dedup.ensureContainmentIndex]] contract). */
+  /** Build-once [[writeBm25Index]] through [[graft.io.StoredIndex]]
+    * (the postings and their `.stats` sibling both gate). */
   def ensureBm25Index(spark: SparkSession, docs: => DataFrame,
       idCol: String, textCol: String, path: String): Unit =
-    bm25Indexes.computeIfAbsent(path, { _ =>
-      if (!graft.io.IndexPaths.complete(spark, path) ||
-          !graft.io.IndexPaths.complete(spark, path + ".stats"))
-        writeBm25Index(docs, idCol, textCol, path, coalesceTo = 8)
-      java.lang.Boolean.TRUE
-    })
+    graft.io.StoredIndex.ensure(spark, path, path + ".stats")(
+      writeBm25Index(docs, idCol, textCol, path, coalesceTo = 8))
 
+  /** BM25 top-k through the materialized index: [[ensureBm25Index]],
+    * then every query-set evaluation is ONE postings read + the
+    * broadcast-match scoring pass — the corpus text is never
+    * re-tokenized at query time. */
   def bm25TopKIndexed(spark: SparkSession, docs: => DataFrame,
       idCol: String, textCol: String, path: String, queries: DataFrame,
       k: Int, qidCol: String = "query_id", qtextCol: String = "qtext")
@@ -339,8 +326,8 @@ object Retrieval {
     * one postings-column scan + one batch tokenization (work ∝ batch
     * + vocabulary, the corpus is never re-read for the alarm); the
     * rebuilt index is identical to a fresh [[writeBm25Index]] build
-    * (spec-pinned), and the build-once memo is refreshed so in-session
-    * [[bm25TopKIndexed]] queries pick it up without a JVM bounce.
+    * (spec-pinned) and in-session [[bm25TopKIndexed]] queries read it
+    * at once.
     * @return true iff a rebuild ran. */
   def refreshBm25IndexIfDrifted(spark: SparkSession, docs: => DataFrame,
       idCol: String, textCol: String, path: String, batch: DataFrame,
@@ -349,10 +336,7 @@ object Retrieval {
     val tv = bm25IndexDrift(spark, path, batch, batchTextCol, minCount)
       .agg(coalesce(sum(col("rate_diff_ppm")), lit(0L))).head().getLong(0)
     val drifted = tv > maxDriftPpm
-    if (drifted) {
-      writeBm25Index(docs, idCol, textCol, path, coalesceTo = 8)
-      bm25Indexes.put(path, java.lang.Boolean.TRUE)
-    }
+    if (drifted) writeBm25Index(docs, idCol, textCol, path, coalesceTo = 8)
     drifted
   }
 }

@@ -389,40 +389,25 @@ object Similarity {
       .coalesce(1).write.mode("overwrite").parquet(knnBuildStatsPath(path))
   }
 
-  private val knnIndexes =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
-
-  /** Build-once memo around [[knnWriteIndex]] (committed on-disk
-    * indexes reused across JVMs, torn dirs rebuild — the
-    * [[graft.operators.Dedup.ensureBandIndex]] contract; all three
-    * artifacts gate, so a crash between the writes rebuilds). */
+  /** Build-once [[knnWriteIndex]] through [[graft.io.StoredIndex]]
+    * (all three artifacts gate, so a crash between the writes
+    * rebuilds). */
   def ensureKnnIndex(emb: => DataFrame, idCol: String, vecCol: String,
       path: String, k: Int = 5, nPlanes: Int = 8, nBands: Int = 8,
       dim: Int = 0, maxBucket: Int = 64): Unit =
-    knnIndexes.computeIfAbsent(path, { _ =>
-      val spark = org.apache.spark.sql.SparkSession.active
-      if (!(graft.io.IndexPaths.complete(spark, path) &&
-          graft.io.IndexPaths.complete(spark, knnBucketsPath(path)) &&
-          graft.io.IndexPaths.complete(spark, knnBuildStatsPath(path))))
-        knnWriteIndex(emb, idCol, vecCol, path, k, nPlanes, nBands, dim,
-          maxBucket)
-      java.lang.Boolean.TRUE
-    })
-
-  /** Drop the build-once memo for `path`. */
-  def invalidateKnnIndex(path: String): Unit = knnIndexes.remove(path)
+    graft.io.StoredIndex.ensure(SparkSession.active, path,
+      knnBucketsPath(path), knnBuildStatsPath(path))(
+      knnWriteIndex(emb, idCol, vecCol, path, k, nPlanes, nBands, dim,
+        maxBucket))
 
   /** Retrain the kNN graph over the CURRENT corpus and overwrite the
     * stored index (all three artifacts) — the restore for
-    * [[appendToKnnIndex]]'s documented one-sided staleness. Refreshes
-    * the build-once memo. */
+    * [[appendToKnnIndex]]'s documented one-sided staleness. */
   def rebuildKnnIndex(emb: DataFrame, idCol: String, vecCol: String,
       path: String, k: Int = 5, nPlanes: Int = 8, nBands: Int = 8,
-      dim: Int = 0, maxBucket: Int = 64): Unit = {
+      dim: Int = 0, maxBucket: Int = 64): Unit =
     knnWriteIndex(emb, idCol, vecCol, path, k, nPlanes, nBands, dim,
       maxBucket)
-    knnIndexes.put(path, java.lang.Boolean.TRUE)
-  }
 
   /** The stored (anchor, pos_id) rank-1 slice of a kNN index — the
     * contrastive-positive table. The bounded heap's rank 1 is the
@@ -798,49 +783,34 @@ object Similarity {
   def appendToIvfIndex(newEmb: DataFrame, path: String, idCol: String,
       vecCol: String): Unit = {
     val spark = newEmb.sparkSession
-    val centroids = Option(ivfIndexes.get(path))
+    val centroids = graft.io.StoredIndex.memo[Array[Seq[Float]]](path)
       .getOrElse(loadCentroids(spark, path))
     assignToCentroids(newEmb, vecCol, centroids)
       .select(col(idCol), col(vecCol), col("__cid"))
       .write.mode("append").partitionBy("__cid").parquet(path)
   }
 
-  /** Centroid matrices of already-built [[ivfWriteIndex]] tables, keyed
-    * by index path. The index build is an OFFLINE step (one k-means
-    * training + one partitioned write per corpus version); queries are
-    * directory-pruned probes. The memo makes repeated query invocations
-    * in one session pay the build exactly once — the same lifecycle a
-    * production deployment has, where the index is built by an ingest
-    * job and queried by everyone else. */
-  private val ivfIndexes =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[Seq[Float]]]()
+  /** Build-once IVF index through [[graft.io.StoredIndex]]: the index
+    * table and its centroid sibling gate; a fresh JVM reloads a
+    * committed index's centroids instead of retraining (the index is
+    * self-describing on disk, see [[ivfWriteIndex]]), a torn or missing
+    * one rebuilds. Returns the centroid matrix. */
+  private def ensureIvfIndex(spark: SparkSession, emb: => DataFrame,
+      idCol: String, vecCol: String, indexPath: String,
+      nClusters: Int): Array[Seq[Float]] =
+    graft.io.StoredIndex.ensureValue(spark, indexPath,
+      centroidsPath(indexPath))(loadCentroids(spark, indexPath))(
+      ivfWriteIndex(emb, idCol, vecCol, indexPath, nClusters))
 
-  /** Drop the build-once memo for `indexPath` so the next
-    * [[ivfTopKIndexed]] rebuilds (e.g. after deleting the index dir
-    * mid-session). With content-addressed paths
-    * ([[graft.io.IndexPaths]]) source changes rebuild automatically —
-    * a changed source is a new path. */
-  def invalidateIvfIndex(indexPath: String): Unit = ivfIndexes.remove(indexPath)
-
-  /** IVF ANN top-k THROUGH the materialized index: build-once (memoized
-    * per `indexPath`), then [[ivfQueryIndex]]'s partition-pruned probe.
+  /** IVF ANN top-k THROUGH the materialized index: [[ensureIvfIndex]],
+    * then [[ivfQueryIndex]]'s partition-pruned probe.
     * This is the form a query inventory should expose — per-query
     * k-means training ([[ivfTopK]]) is a non-starter at corpus scale. */
   def ivfTopKIndexed(spark: SparkSession, emb: => DataFrame, idCol: String,
       vecCol: String, indexPath: String, probeId: Long, k: Int,
       nClusters: Int = 16, nProbe: Int = 4): DataFrame = {
-    // a fresh JVM reloads an already-built index's centroids from the
-    // sibling file instead of retraining over it — the index is
-    // self-describing on disk (see ivfWriteIndex). Both the index table
-    // and the centroid sibling must carry their _SUCCESS commit marker:
-    // a torn dir from a killed build job reads as absent and rebuilds
-    // (overwrite), never as silently-partial data.
-    val centroids = ivfIndexes.computeIfAbsent(indexPath,
-      _ =>
-        if (graft.io.IndexPaths.complete(spark, indexPath) &&
-            graft.io.IndexPaths.complete(spark, centroidsPath(indexPath)))
-          loadCentroids(spark, indexPath)
-        else ivfWriteIndex(emb, idCol, vecCol, indexPath, nClusters))
+    val centroids = ensureIvfIndex(spark, emb, idCol, vecCol, indexPath,
+      nClusters)
     ivfQueryIndex(spark, indexPath, centroids, idCol, vecCol, probeId, k, nProbe)
   }
 
@@ -901,18 +871,14 @@ object Similarity {
         VectorFns.cosineQ(col(vecCol), col("__pv")).as("cos_sim")), k)
   }
 
-  /** Batched [[ivfTopKIndexed]]: build-once memoized index, then the
-    * one-scan probe-set query above. */
+  /** Batched [[ivfTopKIndexed]]: [[ensureIvfIndex]], then the one-scan
+    * probe-set query above. */
   def ivfTopKIndexedBatch(spark: SparkSession, emb: => DataFrame,
       idCol: String, vecCol: String, indexPath: String,
       probeIds: Seq[Long], k: Int, nClusters: Int = 16,
       nProbe: Int = 4): DataFrame = {
-    val centroids = ivfIndexes.computeIfAbsent(indexPath,
-      _ =>
-        if (graft.io.IndexPaths.complete(spark, indexPath) &&
-            graft.io.IndexPaths.complete(spark, centroidsPath(indexPath)))
-          loadCentroids(spark, indexPath)
-        else ivfWriteIndex(emb, idCol, vecCol, indexPath, nClusters))
+    val centroids = ensureIvfIndex(spark, emb, idCol, vecCol, indexPath,
+      nClusters)
     ivfQueryIndexBatch(spark, indexPath, centroids, idCol, vecCol,
       probeIds, k, nProbe)
   }
@@ -1203,23 +1169,12 @@ object Similarity {
       .select(col(idCol).as("vec_id"), col("qvec"))
       .write.mode("append").parquet(path)
 
-  private val quantizedIndexes =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
-
-  /** Drop the build-once memo for `path`. */
-  def invalidateQuantizedIndex(path: String): Unit =
-    quantizedIndexes.remove(path)
-
-  /** Build-once memo around [[writeQuantizedIndex]]: committed
-    * on-disk indexes reused across JVMs, torn dirs rebuild — the
-    * [[graft.operators.Dedup.ensureBandIndex]] contract. */
+  /** Build-once [[writeQuantizedIndex]] through
+    * [[graft.io.StoredIndex]]. */
   def ensureQuantizedIndex(spark: SparkSession, emb: => DataFrame,
       idCol: String, vecCol: String, path: String): Unit =
-    quantizedIndexes.computeIfAbsent(path, { _ =>
-      if (!graft.io.IndexPaths.complete(spark, path))
-        writeQuantizedIndex(emb, idCol, vecCol, path)
-      java.lang.Boolean.TRUE
-    })
+    graft.io.StoredIndex.ensure(spark, path)(
+      writeQuantizedIndex(emb, idCol, vecCol, path))
 
   /** [[quantizedTopKBatch]] through the stored (vec_id, qvec) index:
     * quantization paid at build time, every query-set evaluation is
@@ -1471,24 +1426,13 @@ object Similarity {
     spark.read.parquet(centroidsPath(path))
       .orderBy(col("cid").asc).collect().map(_.getSeq[Long](1))
 
-  private val kmeansIndexes =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
-
-  /** Build-once memo around [[kmeansWriteIndex]] (committed on-disk
-    * indexes are reused across JVMs — content-addressed paths make
-    * staleness impossible for source changes). */
+  /** Build-once [[kmeansWriteIndex]] through [[graft.io.StoredIndex]]
+    * (the assignments and their centroid sibling gate). */
   def ensureKmeansIndex(emb: => DataFrame, idCol: String, vecCol: String,
       path: String, k: Int = 8, iters: Int = 2): Unit =
-    kmeansIndexes.computeIfAbsent(path, { _ =>
-      val spark = org.apache.spark.sql.SparkSession.active
-      if (!(graft.io.IndexPaths.complete(spark, path) &&
-          graft.io.IndexPaths.complete(spark, centroidsPath(path))))
-        kmeansWriteIndex(emb, idCol, vecCol, path, k, iters)
-      java.lang.Boolean.TRUE
-    })
-
-  /** Drop the build-once memo for `path`. */
-  def invalidateKmeansIndex(path: String): Unit = kmeansIndexes.remove(path)
+    graft.io.StoredIndex.ensure(SparkSession.active, path,
+      centroidsPath(path))(kmeansWriteIndex(emb, idCol, vecCol, path, k,
+        iters))
 
   /** Classify a NEW batch against the stored clustering and append its
     * assignments — the kmeans ingest step (cf. [[appendToIvfIndex]]):
@@ -1516,14 +1460,10 @@ object Similarity {
     * batch's mean `dist_q` to the seed corpus's mean — a
     * distribution-shifted batch lands far from every stale centroid
     * and the ratio jumps (SimilaritySpec pins ~an order of magnitude
-    * on a planted shift; ≥ 2× is a sane production alarm). Refreshes
-    * the build-once memo. */
+    * on a planted shift; ≥ 2× is a sane production alarm). */
   def rebuildKmeansIndex(emb: DataFrame, path: String, idCol: String,
-      vecCol: String, k: Int = 8, iters: Int = 2): Array[Seq[Long]] = {
-    val cbs = kmeansWriteIndex(emb, idCol, vecCol, path, k, iters)
-    kmeansIndexes.put(path, java.lang.Boolean.TRUE)
-    cbs
-  }
+      vecCol: String, k: Int = 8, iters: Int = 2): Array[Seq[Long]] =
+    kmeansWriteIndex(emb, idCol, vecCol, path, k, iters)
 
   /** ALARM → REBUILD for the kmeans index (cf.
     * [[rebuildPqIndexIfDrifted]]): classify the arriving batch against
@@ -1836,7 +1776,7 @@ object Similarity {
   def appendToPqIndex(newEmb: DataFrame, path: String, idCol: String,
       vecCol: String): Unit = {
     val spark = newEmb.sparkSession
-    val cbs = Option(pqIndexes.get(path))
+    val cbs = graft.io.StoredIndex.memo[Array[Array[Seq[Float]]]](path)
       .getOrElse(loadPqCodebooks(spark, path))
     pqEncode(newEmb, idCol, vecCol, cbs)
       .write.mode("append").parquet(path)
@@ -1877,14 +1817,12 @@ object Similarity {
   /** Retrain PQ codebooks over the CURRENT corpus and overwrite the
     * stored codes — the restore for [[appendToPqIndex]]'s documented
     * codebook drift (trigger: [[pqQuantizationError]]). Replaces the
-    * in-session codebook memo so queries pick up the retrain without
-    * a JVM bounce. */
+    * in-session codebook memo ([[graft.io.StoredIndex.rebuild]]) so
+    * queries pick up the retrain without a JVM bounce. */
   def rebuildPqIndex(emb: DataFrame, path: String, idCol: String,
-      vecCol: String, m: Int = 16, k: Int = 16): Array[Array[Seq[Float]]] = {
-    val cbs = pqWriteIndex(emb, idCol, vecCol, path, m, k)
-    pqIndexes.put(path, cbs)
-    cbs
-  }
+      vecCol: String, m: Int = 16, k: Int = 16): Array[Array[Seq[Float]]] =
+    graft.io.StoredIndex.rebuild(path)(
+      pqWriteIndex(emb, idCol, vecCol, path, m, k))
 
   /** ALARM → REBUILD, composed — the arc that makes the PQ index
     * lifecycle unattended-safe: measure the arriving batch's mean
@@ -1901,7 +1839,7 @@ object Similarity {
       path: String, idCol: String, vecCol: String, m: Int = 16,
       k: Int = 16, threshold: Double = 2.0): Boolean = {
     val spark = batch.sparkSession
-    val cbs = Option(pqIndexes.get(path))
+    val cbs = graft.io.StoredIndex.memo[Array[Array[Seq[Float]]]](path)
       .getOrElse(loadPqCodebooks(spark, path))
     def meanErr(df: DataFrame): Double =
       pqQuantizationError(df, idCol, vecCol, cbs)
@@ -1921,12 +1859,16 @@ object Similarity {
     drifted
   }
 
-  private val pqIndexes =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[Array[Seq[Float]]]]()
-
-  /** Drop the build-once memo for `indexPath` (content-addressed paths
-    * make this unnecessary for source changes). */
-  def invalidatePqIndex(indexPath: String): Unit = pqIndexes.remove(indexPath)
+  /** Build-once PQ index through [[graft.io.StoredIndex]]: the codes
+    * and their codebook sibling gate; a committed index reloads its
+    * codebooks, a torn or missing one retrains. Returns the
+    * codebooks. */
+  private def ensurePqIndex(spark: SparkSession, emb: => DataFrame,
+      idCol: String, vecCol: String, indexPath: String, m: Int,
+      kCode: Int): Array[Array[Seq[Float]]] =
+    graft.io.StoredIndex.ensureValue(spark, indexPath,
+      pqCodebooksPath(indexPath))(loadPqCodebooks(spark, indexPath))(
+      pqWriteIndex(emb, idCol, vecCol, indexPath, m, kCode))
 
   /** The shared ADC-scan + exact-rerank tail of both PQ query paths
     * ([[pqTopKIndexed]], [[ivfPqTopKIndexed]]): the query's
@@ -2004,12 +1946,16 @@ object Similarity {
     (centroids, cbs)
   }
 
-  private val ivfPqIndexes = new java.util.concurrent.ConcurrentHashMap[
-    String, (Array[Seq[Float]], Array[Array[Seq[Float]]])]()
-
-  /** Drop the build-once memo for `indexPath`. */
-  def invalidateIvfPqIndex(indexPath: String): Unit =
-    ivfPqIndexes.remove(indexPath)
+  /** Build-once IVF-PQ index through [[graft.io.StoredIndex]]: the
+    * codes, centroid and codebook siblings all gate. Returns
+    * (centroids, codebooks). */
+  private def ensureIvfPqIndex(spark: SparkSession, emb: => DataFrame,
+      idCol: String, vecCol: String, indexPath: String, nClusters: Int,
+      m: Int, kCode: Int): (Array[Seq[Float]], Array[Array[Seq[Float]]]) =
+    graft.io.StoredIndex.ensureValue(spark, indexPath,
+      centroidsPath(indexPath), pqCodebooksPath(indexPath))(
+      (loadCentroids(spark, indexPath), loadPqCodebooks(spark, indexPath)))(
+      ivfPqWriteIndex(emb, idCol, vecCol, indexPath, nClusters, m, kCode))
 
   /** IVF-PQ ANN top-k through the materialized index: pick the
     * `nProbe` nearest coarse centroids, read ONLY those partitions
@@ -2024,13 +1970,8 @@ object Similarity {
       idCol: String, vecCol: String, indexPath: String, probeId: Long,
       k: Int, nClusters: Int = 16, nProbe: Int = 4, m: Int = 16,
       kCode: Int = 16, shortlistFactor: Int = 16): DataFrame = {
-    val (centroids, cbs) = ivfPqIndexes.computeIfAbsent(indexPath,
-      _ =>
-        if (graft.io.IndexPaths.complete(spark, indexPath) &&
-            graft.io.IndexPaths.complete(spark, centroidsPath(indexPath)) &&
-            graft.io.IndexPaths.complete(spark, pqCodebooksPath(indexPath)))
-          (loadCentroids(spark, indexPath), loadPqCodebooks(spark, indexPath))
-        else ivfPqWriteIndex(emb, idCol, vecCol, indexPath, nClusters, m, kCode))
+    val (centroids, cbs) = ensureIvfPqIndex(spark, emb, idCol, vecCol,
+      indexPath, nClusters, m, kCode)
     val e = emb
     val qvec = e.where(col(idCol) === probeId).select(col(vecCol)).head()
       .getSeq[Float](0)
@@ -2050,12 +1991,7 @@ object Similarity {
   def pqTopKIndexed(spark: SparkSession, emb: => DataFrame, idCol: String,
       vecCol: String, indexPath: String, probeId: Long, k: Int,
       m: Int = 16, kCode: Int = 16, shortlistFactor: Int = 16): DataFrame = {
-    val cbs = pqIndexes.computeIfAbsent(indexPath,
-      _ =>
-        if (graft.io.IndexPaths.complete(spark, indexPath) &&
-            graft.io.IndexPaths.complete(spark, pqCodebooksPath(indexPath)))
-          loadPqCodebooks(spark, indexPath)
-        else pqWriteIndex(emb, idCol, vecCol, indexPath, m, kCode))
+    val cbs = ensurePqIndex(spark, emb, idCol, vecCol, indexPath, m, kCode)
     val e = emb
     val qvec = e.where(col(idCol) === probeId).select(col(vecCol)).head()
       .getSeq[Float](0)
@@ -2138,18 +2074,13 @@ object Similarity {
   }
 
   /** Batched [[pqTopKIndexed]] over a probe set — the recall-eval /
-    * offline-serving shape: build-once memoized codebooks, then ONE
+    * offline-serving shape: [[ensurePqIndex]], then ONE
     * ADC scan of the stored codes serves the whole probe set. */
   def pqTopKIndexedBatch(spark: SparkSession, emb: => DataFrame,
       idCol: String, vecCol: String, indexPath: String,
       probeIds: Seq[Long], k: Int, m: Int = 16, kCode: Int = 16,
       shortlistFactor: Int = 16): DataFrame = {
-    val cbs = pqIndexes.computeIfAbsent(indexPath,
-      _ =>
-        if (graft.io.IndexPaths.complete(spark, indexPath) &&
-            graft.io.IndexPaths.complete(spark, pqCodebooksPath(indexPath)))
-          loadPqCodebooks(spark, indexPath)
-        else pqWriteIndex(emb, idCol, vecCol, indexPath, m, kCode))
+    val cbs = ensurePqIndex(spark, emb, idCol, vecCol, indexPath, m, kCode)
     val e = emb
     val pv = probeVecsOf(e, idCol, vecCol, probeIds, s"embeddings for $indexPath")
     import spark.implicits._
@@ -2170,13 +2101,8 @@ object Similarity {
       idCol: String, vecCol: String, indexPath: String,
       probeIds: Seq[Long], k: Int, nClusters: Int = 16, nProbe: Int = 4,
       m: Int = 16, kCode: Int = 16, shortlistFactor: Int = 16): DataFrame = {
-    val (centroids, cbs) = ivfPqIndexes.computeIfAbsent(indexPath,
-      _ =>
-        if (graft.io.IndexPaths.complete(spark, indexPath) &&
-            graft.io.IndexPaths.complete(spark, centroidsPath(indexPath)) &&
-            graft.io.IndexPaths.complete(spark, pqCodebooksPath(indexPath)))
-          (loadCentroids(spark, indexPath), loadPqCodebooks(spark, indexPath))
-        else ivfPqWriteIndex(emb, idCol, vecCol, indexPath, nClusters, m, kCode))
+    val (centroids, cbs) = ensureIvfPqIndex(spark, emb, idCol, vecCol,
+      indexPath, nClusters, m, kCode)
     val e = emb
     val pv = probeVecsOf(e, idCol, vecCol, probeIds, s"embeddings for $indexPath")
     val pairs = probeIds.flatMap { pid =>
@@ -2319,23 +2245,11 @@ object Similarity {
     }
   }
 
-  private val signIndexes =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
-
-  /** Drop the build-once memo for `path`. */
-  def invalidateSignIndex(path: String): Unit =
-    signIndexes.remove(path)
-
-  /** Build-once memo around [[writeSignIndex]] — the
-    * [[ensureQuantizedIndex]] contract (`_SUCCESS`-gated, torn builds
-    * re-run, content-addressed paths). */
+  /** Build-once [[writeSignIndex]] through [[graft.io.StoredIndex]]. */
   def ensureSignIndex(spark: SparkSession, emb: => DataFrame,
       idCol: String, vecCol: String, path: String, dim: Int = 64): Unit =
-    signIndexes.computeIfAbsent(path, { _ =>
-      if (!graft.io.IndexPaths.complete(spark, path))
-        writeSignIndex(emb, idCol, vecCol, path, dim)
-      java.lang.Boolean.TRUE
-    })
+    graft.io.StoredIndex.ensure(spark, path)(
+      writeSignIndex(emb, idCol, vecCol, path, dim))
 
   /** [[hammingTopKBatch]] through the stored code table: the corpus
     * streams past as codes — the float `embeddings` column is NEVER

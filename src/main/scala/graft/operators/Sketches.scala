@@ -150,24 +150,14 @@ object Sketches {
       keepLast)(_.select(col("term")).distinct())
   }
 
-  private val cmsIndexes =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
-
-  /** Build-once memo around a CMS-index build — the ensureCardIndex
-    * lifecycle: complete iff every expected batch dir of both partials
-    * carries `_SUCCESS` OR is recorded as folded by a committed
-    * compaction ([[graft.io.Compaction.batchComplete]] — without the
-    * second arm, a post-compaction session would see the deleted
-    * batch dirs as "incomplete", re-run the build, and double-count
-    * the already-folded partials). Torn builds re-run `build`, whose
+  /** Build-once CMS index through
+    * [[graft.io.StoredIndex.ensureBatches]] over both partials:
+    * folded batches never rebuild (a post-compaction session would
+    * otherwise see the deleted batch dirs as missing and double-count
+    * the already-folded partials); torn builds re-run `build`, whose
     * per-batch overwrites are idempotent. */
   def ensureCmsIndex(spark: org.apache.spark.sql.SparkSession,
       path: String, batchIds: Seq[Long])(build: Seq[Long] => Unit): Unit =
-    cmsIndexes.computeIfAbsent(path, { _ =>
-      val missing = batchIds.filterNot(id =>
-        Seq("cells", "cand").forall(sub =>
-          graft.io.Compaction.batchComplete(spark, s"$path/$sub", id)))
-      if (missing.nonEmpty) build(missing)
-      java.lang.Boolean.TRUE
-    })
+    graft.io.StoredIndex.ensureBatches(spark, path, Seq("cells", "cand"),
+      batchIds)(build)
 }

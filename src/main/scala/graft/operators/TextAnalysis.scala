@@ -1004,23 +1004,13 @@ object TextAnalysis {
         .agg(sum(col("n_grams")).as("n_grams")))
   }
 
-  private val memIndexes =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
-
-  /** Build-once memo around a memorization-index build — the
-    * [[ensureCardIndex]] lifecycle: complete iff every expected batch
-    * dir of both partials carries `_SUCCESS` or is recorded as folded;
-    * torn builds re-run `build` for the genuinely MISSING ids only
-    * (the ensureCardIndex contract — folded batches never rebuild). */
+  /** Build-once memorization index through
+    * [[graft.io.StoredIndex.ensureBatches]] over both partials; `build`
+    * receives the genuinely missing batch ids only. */
   def ensureMemorizationIndex(spark: org.apache.spark.sql.SparkSession,
       path: String, batchIds: Seq[Long])(build: Seq[Long] => Unit): Unit =
-    memIndexes.computeIfAbsent(path, { _ =>
-      val missing = batchIds.filterNot(id =>
-        Seq("grams", "stats").forall(sub =>
-          graft.io.Compaction.batchComplete(spark, s"$path/$sub", id)))
-      if (missing.nonEmpty) build(missing)
-      java.lang.Boolean.TRUE
-    })
+    graft.io.StoredIndex.ensureBatches(spark, path, Seq("grams", "stats"),
+      batchIds)(build)
 
   /** Hard per-source document cap (the RefinedWeb-style domain cap:
     * no single domain may contribute more than `cap` docs, however
@@ -1244,21 +1234,13 @@ object TextAnalysis {
         .agg(sum(col("raw_cnt")).as("raw_cnt"),
           sum(col("tgt_cnt")).as("tgt_cnt")))
 
-  private val impIndexes =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
-
-  /** Build-once memo for the importance-profile index (the
-    * ensureCardIndex lifecycle; folded-manifest-aware like
-    * [[graft.operators.Sketches.ensureCmsIndex]]). `build` receives
-    * the genuinely missing batch ids — folded ones never rebuild. */
+  /** Build-once importance-profile index through
+    * [[graft.io.StoredIndex.ensureBatches]]; `build` receives the
+    * genuinely missing batch ids — folded ones never rebuild. */
   def ensureImportanceIndex(spark: org.apache.spark.sql.SparkSession,
       path: String, batchIds: Seq[Long])(build: Seq[Long] => Unit): Unit =
-    impIndexes.computeIfAbsent(path, { _ =>
-      val missing = batchIds.filterNot(id =>
-        graft.io.Compaction.batchComplete(spark, s"$path/prof", id))
-      if (missing.nonEmpty) build(missing)
-      java.lang.Boolean.TRUE
-    })
+    graft.io.StoredIndex.ensureBatches(spark, path, Seq("prof"),
+      batchIds)(build)
 
   /** Hashed-bucket feature id of a token — deterministic, portable,
     * the hashing-trick feature map shared by [[trainHashedPerceptron]]
@@ -1984,17 +1966,12 @@ object TextAnalysis {
       .write.mode("overwrite").parquet(s"$path/batch=$batchId")
   }
 
-  /** Build-once memo for a calibration index (cf. [[ensureCardIndex]];
-    * shares the memo map — paths are content-addressed and disjoint).
-    * `build` receives the batch ids whose dirs lack `_SUCCESS`. */
+  /** Build-once calibration index through
+    * [[graft.io.StoredIndex.ensureBatches]]; `build` receives the
+    * missing batch ids. */
   def ensureCalibrationIndex(spark: org.apache.spark.sql.SparkSession,
       path: String, batchIds: Seq[Long])(build: Seq[Long] => Unit): Unit =
-    cardIndexes.computeIfAbsent(path, { _ =>
-      val missing = batchIds.filterNot(id =>
-        graft.io.IndexPaths.complete(spark, s"$path/batch=$id"))
-      if (missing.nonEmpty) build(missing)
-      java.lang.Boolean.TRUE
-    })
+    graft.io.StoredIndex.ensureBatches(spark, path, Nil, batchIds)(build)
 
   /** Per-source decision TABLE from a stored calibration index — the
     * broadcastable artifact a training loader applies map-side: keep a
@@ -2558,26 +2535,16 @@ object TextAnalysis {
     rates.join(langs, Seq("source"))
   }
 
-  private val cardIndexes =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
-
-  /** Build-once memo around a card-index build (same lifecycle as
-    * [[Dedup.ensureBandIndex]]: ingest builds, queries only read). The
-    * index is COMPLETE when every expected batch directory of all
-    * three partial tables carries its parquet `_SUCCESS`; a torn build
-    * (killed mid-append) fails that check and re-runs `build`, whose
-    * per-batch overwrites make the re-run idempotent. Content-address
-    * the path ([[graft.io.IndexPaths]]) so regenerated sources never
-    * reuse a stale index. */
+  /** Build-once card index through
+    * [[graft.io.StoredIndex.ensureBatches]] over all three partials
+    * (ingest builds, queries only read); a torn build re-runs `build`
+    * for the missing ids, whose per-batch overwrites make the re-run
+    * idempotent. Content-address the path ([[graft.io.IndexPaths]]) so
+    * regenerated sources never reuse a stale index. */
   def ensureCardIndex(spark: org.apache.spark.sql.SparkSession,
       path: String, batchIds: Seq[Long])(build: Seq[Long] => Unit): Unit =
-    cardIndexes.computeIfAbsent(path, { _ =>
-      val missing = batchIds.filterNot(id =>
-        Seq("stats", "langs", "hashes").forall(sub =>
-          graft.io.Compaction.batchComplete(spark, s"$path/$sub", id)))
-      if (missing.nonEmpty) build(missing)
-      java.lang.Boolean.TRUE
-    })
+    graft.io.StoredIndex.ensureBatches(spark, path,
+      Seq("stats", "langs", "hashes"), batchIds)(build)
 
   /** TOKENIZER-FERTILITY audit per predicted language — the dataset
     * card's tokenizer-fairness companion: BPE tokens per 100

@@ -611,7 +611,7 @@ object TextQueries {
     // Incremental dedup — the production ingest shape: docs with
     // doc_id % 5 == 4 are the "new batch", the rest the existing
     // corpus, whose signatures live in a MATERIALIZED band-bucket index
-    // (built once, memoized like the IVF index). Query-time signature
+    // (built once through StoredIndex). Query-time signature
     // work is proportional to the batch; the oracle is the brute-force
     // ground truth restricted to pairs with a new-batch side.
     "q_incremental_dedup" -> { (s, dir) =>
@@ -1308,7 +1308,7 @@ object TextQueries {
 
     // STORED calibration thresholds: the score histogram arrives in
     // two batches (the ingest fold — additive partials, offline via
-    // the build-once memo) and the per-source release cut table is
+    // StoredIndex.ensureBatches) and the per-source release cut table is
     // derived from the STORED histogram alone — sources-row output, no
     // corpus access. keepQ = 13107 (~top 20%) so the boundary bucket
     // and cut_q both bite. Full integer oracle.
@@ -2356,8 +2356,8 @@ object TextQueries {
     // additive partials into the stored card index, and the card is
     // assembled from the STORED relations only — bit-identical to
     // q_dataset_card over the full corpus (the shared oracle). The
-    // two folds are the offline ingest step (build-once memo + the
-    // per-batch-overwrite idempotency the specs pin); the QUERY is
+    // two folds are the offline ingest step (StoredIndex.ensureBatches
+    // + the per-batch-overwrite idempotency the specs pin); the QUERY is
     // the read — no document text is touched. Content-addressed path,
     // so regenerated testdata never reads a stale index.
     "q_card_incremental" -> { (s, dir) =>

@@ -256,6 +256,28 @@ object Streams {
         TimeMode.None(), OutputMode.Update())
   }
 
+  /** The one `foreachBatch` loop behind every stream sink here. Each
+    * micro-batch first rolls forward an interrupted compaction swap on
+    * every `recover` path ([[graft.io.Compaction.recover]]) — a crash
+    * between a committed swap and its rename would otherwise let this
+    * batch's corpus/index reads miss the data. The roll-forward is
+    * UNCONDITIONAL (not gated on a stream's `compactEvery`): a stream
+    * that previously ran WITH compaction and crashed mid-swap must
+    * still heal when restarted with compaction off, and recover is a
+    * cheap existence check when no swap is pending. Then
+    * `body(batch, batchId)` runs. */
+  private def batchLoop(in: DataFrame, checkpoint: String,
+      recover: Seq[String] = Nil)(body: (DataFrame, Long) => Unit)
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    in.writeStream
+      .option("checkpointLocation", checkpoint)
+      .foreachBatch { (batch: DataFrame, id: Long) =>
+        recover.foreach(graft.io.Compaction.recover(batch.sparkSession, _))
+        body(batch, id)
+      }
+      .outputMode("append")
+      .start()
+
   /** foreachBatch sink with per-batch-directory overwrite: each micro
     * batch lands in `<path>/batch=<id>` with Overwrite mode, so a batch
     * REPLAYED after a failure/restart overwrites its own directory
@@ -264,13 +286,9 @@ object Streams {
     * same shape drives MERGE upserts on transactional stores). */
   def foreachBatchParquetSink(df: DataFrame, path: String, checkpoint: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    df.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        batch.write.mode("overwrite").parquet(s"$path/batch=$id")
-      }
-      .outputMode("append")
-      .start()
+    batchLoop(df, checkpoint) { (batch, id) =>
+      batch.write.mode("overwrite").parquet(s"$path/batch=$id")
+    }
 
   /** The STREAMING form of the production ingest-dedup loop: each
     * micro-batch of arriving documents is deduped against everything
@@ -308,28 +326,17 @@ object Streams {
       bands: Int = 16, threshold: Double = 0.8, maxBucket: Int = 64,
       compactEvery: Int = 0)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val spark = batch.sparkSession
-        // crash between a committed swap and its rename: roll forward
-        // before this batch's corpus/index reads can miss the data.
-        // UNCONDITIONAL (not gated on compactEvery): a stream that
-        // previously ran WITH compaction and crashed mid-swap must
-        // still heal when restarted with compaction off — recover is
-        // a cheap existence check when no swap is pending
-        graft.io.Compaction.recover(spark, s"$admittedRoot/batch=-1")
-        graft.io.Compaction.recover(spark, indexPath)
-        graft.operators.Dedup.ingestDedupBatch(batch, id, indexPath,
-          admittedRoot, idCol, textCol, ngram, numHashes, bands, threshold,
-          maxBucket)
-        if (compactEvery > 0 && (id + 1) % compactEvery == 0) {
-          graft.operators.Dedup.compactAdmitted(spark, admittedRoot)
-          graft.operators.Dedup.compactBandIndex(spark, indexPath)
-        }
+    batchLoop(docs, checkpoint,
+        Seq(s"$admittedRoot/batch=-1", indexPath)) { (batch, id) =>
+      val spark = batch.sparkSession
+      graft.operators.Dedup.ingestDedupBatch(batch, id, indexPath,
+        admittedRoot, idCol, textCol, ngram, numHashes, bands, threshold,
+        maxBucket)
+      if (compactEvery > 0 && (id + 1) % compactEvery == 0) {
+        graft.operators.Dedup.compactAdmitted(spark, admittedRoot)
+        graft.operators.Dedup.compactBandIndex(spark, indexPath)
       }
-      .outputMode("append")
-      .start()
+    }
 
   /** The streaming CONTAINMENT ingest loop —
     * [[ingestDedupStream]]'s admission driven by the asymmetric-overlap
@@ -366,36 +373,29 @@ object Streams {
       checkDriftEvery: Int = 0, maxDriftPpm: Long = 400000L,
       driftMinCount: Long = 5L)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val spark = batch.sparkSession
-        // unconditional roll-forward, cf. ingestDedupStream
-        graft.io.Compaction.recover(spark, s"$admittedRoot/batch=-1")
-        graft.io.Compaction.recover(spark, indexPath)
-        graft.io.Compaction.recover(spark, indexPath + ".gsets")
-        // drift check BEFORE the fold (mirroring ingestKmeansStream's
-        // check-before-fold): judging the batch against an index that
-        // already contains it dilutes the measured drift by up to half
-        // for corpus-sized batches, desensitizing the alarm
-        if (checkDriftEvery > 0 && (id + 1) % checkDriftEvery == 0 &&
-            !batch.isEmpty &&
-            graft.io.IndexPaths.complete(spark, indexPath))
-          graft.operators.Dedup.rebuildContainmentIndexIfDrifted(
-            spark.read.parquet(admittedRoot)
-              .select(col(idCol), col(textCol)),
-            batch, indexPath, idCol, textCol, ngram, maxDriftPpm,
-            driftMinCount)
-        graft.operators.Dedup.ingestContainmentBatch(batch, id, indexPath,
-          admittedRoot, idCol, textCol, ngram, threshold, maxDf)
-        if (compactEvery > 0 && (id + 1) % compactEvery == 0) {
-          graft.operators.Dedup.compactAdmitted(spark, admittedRoot)
-          graft.operators.Dedup.compactContainmentIndex(spark, indexPath)
-        }
-        ()
+    batchLoop(docs, checkpoint, Seq(s"$admittedRoot/batch=-1", indexPath,
+        indexPath + ".gsets")) { (batch, id) =>
+      val spark = batch.sparkSession
+      // drift check BEFORE the fold (mirroring ingestKmeansStream's
+      // check-before-fold): judging the batch against an index that
+      // already contains it dilutes the measured drift by up to half
+      // for corpus-sized batches, desensitizing the alarm
+      if (checkDriftEvery > 0 && (id + 1) % checkDriftEvery == 0 &&
+          !batch.isEmpty &&
+          graft.io.IndexPaths.complete(spark, indexPath))
+        graft.operators.Dedup.rebuildContainmentIndexIfDrifted(
+          spark.read.parquet(admittedRoot)
+            .select(col(idCol), col(textCol)),
+          batch, indexPath, idCol, textCol, ngram, maxDriftPpm,
+          driftMinCount)
+      graft.operators.Dedup.ingestContainmentBatch(batch, id, indexPath,
+        admittedRoot, idCol, textCol, ngram, threshold, maxDf)
+      if (compactEvery > 0 && (id + 1) % compactEvery == 0) {
+        graft.operators.Dedup.compactAdmitted(spark, admittedRoot)
+        graft.operators.Dedup.compactContainmentIndex(spark, indexPath)
       }
-      .outputMode("append")
-      .start()
+      ()
+    }
 
   /** The streaming EXACT-SUBSTRING scrub loop
     * ([[graft.operators.TextAnalysis.ingestSubstringScrubBatch]] under
@@ -408,23 +408,17 @@ object Streams {
       admittedRoot: String, checkpoint: String, idCol: String = "doc_id",
       textCol: String = "text", n: Int = 5, compactEvery: Int = 0)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val spark = batch.sparkSession
-        // unconditional roll-forward, cf. ingestDedupStream
-        graft.io.Compaction.recover(spark, s"$admittedRoot/batch=-1")
-        graft.io.Compaction.recover(spark, indexPath)
-        graft.operators.TextAnalysis.ingestSubstringScrubBatch(batch, id,
-          indexPath, admittedRoot, idCol, textCol, n)
-        if (compactEvery > 0 && (id + 1) % compactEvery == 0) {
-          graft.operators.Dedup.compactAdmitted(spark, admittedRoot)
-          graft.operators.TextAnalysis.compactSubstringOwnerIndex(spark,
-            indexPath)
-        }
+    batchLoop(docs, checkpoint,
+        Seq(s"$admittedRoot/batch=-1", indexPath)) { (batch, id) =>
+      val spark = batch.sparkSession
+      graft.operators.TextAnalysis.ingestSubstringScrubBatch(batch, id,
+        indexPath, admittedRoot, idCol, textCol, n)
+      if (compactEvery > 0 && (id + 1) % compactEvery == 0) {
+        graft.operators.Dedup.compactAdmitted(spark, admittedRoot)
+        graft.operators.TextAnalysis.compactSubstringOwnerIndex(spark,
+          indexPath)
       }
-      .outputMode("append")
-      .start()
+    }
 
   /** DRIFT-GATED streaming ingest
     * ([[graft.operators.TextAnalysis.driftGatedIngestBatch]] under
@@ -437,15 +431,11 @@ object Streams {
       textCol: String = "text", maxDriftPpm: Long = 400000L,
       minCount: Long = 5L)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        graft.operators.TextAnalysis.driftGatedIngestBatch(batch, id,
-          referenceDocs, admittedRoot, quarantineRoot, textCol,
-          maxDriftPpm, minCount)
-      }
-      .outputMode("append")
-      .start()
+    batchLoop(docs, checkpoint) { (batch, id) =>
+      graft.operators.TextAnalysis.driftGatedIngestBatch(batch, id,
+        referenceDocs, admittedRoot, quarantineRoot, textCol,
+        maxDriftPpm, minCount)
+    }
 
   /** The drift gate composed in FRONT of the streaming dedup loop —
     * the full production ingest as ONE running query
@@ -465,24 +455,18 @@ object Streams {
       numHashes: Int = 64, bands: Int = 16, threshold: Double = 0.8,
       maxBucket: Int = 64, compactEvery: Int = 0)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val spark = batch.sparkSession
-        // unconditional roll-forward, cf. ingestDedupStream
-        graft.io.Compaction.recover(spark, s"$admittedRoot/batch=-1")
-        graft.io.Compaction.recover(spark, indexPath)
-        graft.operators.Dedup.gatedIngestDedupBatch(batch, id,
-          referenceCountsPath, quarantineRoot, indexPath, admittedRoot,
-          idCol, textCol, maxDriftPpm, minCount, ngram, numHashes,
-          bands, threshold, maxBucket)
-        if (compactEvery > 0 && (id + 1) % compactEvery == 0) {
-          graft.operators.Dedup.compactAdmitted(spark, admittedRoot)
-          graft.operators.Dedup.compactBandIndex(spark, indexPath)
-        }
+    batchLoop(docs, checkpoint,
+        Seq(s"$admittedRoot/batch=-1", indexPath)) { (batch, id) =>
+      val spark = batch.sparkSession
+      graft.operators.Dedup.gatedIngestDedupBatch(batch, id,
+        referenceCountsPath, quarantineRoot, indexPath, admittedRoot,
+        idCol, textCol, maxDriftPpm, minCount, ngram, numHashes,
+        bands, threshold, maxBucket)
+      if (compactEvery > 0 && (id + 1) % compactEvery == 0) {
+        graft.operators.Dedup.compactAdmitted(spark, admittedRoot)
+        graft.operators.Dedup.compactBandIndex(spark, indexPath)
       }
-      .outputMode("append")
-      .start()
+    }
 
   /** [[driftGatedIngestStream]] against a STORED reference-counts
     * table ([[graft.operators.TextAnalysis.writeReferenceCounts]] —
@@ -496,15 +480,11 @@ object Streams {
       textCol: String = "text", maxDriftPpm: Long = 400000L,
       minCount: Long = 5L)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        graft.operators.TextAnalysis.driftGatedIngestBatchStored(batch,
-          id, referenceCountsPath, admittedRoot, quarantineRoot,
-          textCol, maxDriftPpm, minCount)
-      }
-      .outputMode("append")
-      .start()
+    batchLoop(docs, checkpoint) { (batch, id) =>
+      graft.operators.TextAnalysis.driftGatedIngestBatchStored(batch,
+        id, referenceCountsPath, admittedRoot, quarantineRoot,
+        textCol, maxDriftPpm, minCount)
+    }
 
   /** Streaming ANN-index maintenance — the embedding-side counterpart
     * of [[ingestDedupStream]]: each micro-batch of arriving embeddings
@@ -523,15 +503,11 @@ object Streams {
       checkpoint: String, idCol: String = "vec_id",
       vecCol: String = "embedding")
       : org.apache.spark.sql.streaming.StreamingQuery =
-    emb.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty)
-          graft.operators.Similarity.appendToIvfIndex(batch, indexPath,
-            idCol, vecCol)
-      }
-      .outputMode("append")
-      .start()
+    batchLoop(emb, checkpoint) { (batch, _) =>
+      if (!batch.isEmpty)
+        graft.operators.Similarity.appendToIvfIndex(batch, indexPath,
+          idCol, vecCol)
+    }
 
   /** Streaming PQ-index maintenance with the alarm→rebuild arc CLOSED
     * IN the loop: each micro-batch of embeddings lands exactly-once in
@@ -557,43 +533,39 @@ object Streams {
       vecCol: String = "embedding", m: Int = 16, k: Int = 16,
       checkDriftEvery: Int = 0, driftThreshold: Double = 2.0)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    emb.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val spark = batch.sparkSession
-        if (!batch.isEmpty) try {
-          val b = batch.select(col(idCol), col(vecCol))
-          b.coalesce(4).write.mode("overwrite")
-            .parquet(s"$corpusRoot/batch=$id")
-          def corpus = spark.read.parquet(corpusRoot)
-            .select(col(idCol), col(vecCol))
-          if (!graft.io.IndexPaths.complete(spark, indexPath))
-            graft.operators.Similarity.rebuildPqIndex(corpus, indexPath,
-              idCol, vecCol, m, k)
-          else {
-            val rebuilt = checkDriftEvery > 0 &&
-              (id + 1) % checkDriftEvery == 0 &&
-              graft.operators.Similarity.rebuildPqIndexIfDrifted(corpus,
-                b, indexPath, idCol, vecCol, m, k, driftThreshold)
-            if (!rebuilt) {
-              val fresh = b.join(
-                spark.read.parquet(indexPath)
-                  .select(col(idCol).as("__stored")),
-                col(idCol) === col("__stored"), "left_anti")
-              if (!fresh.isEmpty)
-                graft.operators.Similarity.appendToPqIndex(fresh,
-                  indexPath, idCol, vecCol)
-            }
+    batchLoop(emb, checkpoint) { (batch, id) =>
+      val spark = batch.sparkSession
+      if (!batch.isEmpty) try {
+        val b = batch.select(col(idCol), col(vecCol))
+        b.coalesce(4).write.mode("overwrite")
+          .parquet(s"$corpusRoot/batch=$id")
+        def corpus = spark.read.parquet(corpusRoot)
+          .select(col(idCol), col(vecCol))
+        if (!graft.io.IndexPaths.complete(spark, indexPath))
+          graft.operators.Similarity.rebuildPqIndex(corpus, indexPath,
+            idCol, vecCol, m, k)
+        else {
+          val rebuilt = checkDriftEvery > 0 &&
+            (id + 1) % checkDriftEvery == 0 &&
+            graft.operators.Similarity.rebuildPqIndexIfDrifted(corpus,
+              b, indexPath, idCol, vecCol, m, k, driftThreshold)
+          if (!rebuilt) {
+            val fresh = b.join(
+              spark.read.parquet(indexPath)
+                .select(col(idCol).as("__stored")),
+              col(idCol) === col("__stored"), "left_anti")
+            if (!fresh.isEmpty)
+              graft.operators.Similarity.appendToPqIndex(fresh,
+                indexPath, idCol, vecCol)
           }
-          // drop every tracked intermediate so the NEXT batch's
-          // corpus re-read cannot hit a stale cached plan (a cached
-          // read of `corpusRoot` canonicalizes equal to a fresh one
-          // and would serve the old file listing)
-        } finally graft.operators.Caches.release()
-        ()
-      }
-      .outputMode("append")
-      .start()
+        }
+        // drop every tracked intermediate so the NEXT batch's
+        // corpus re-read cannot hit a stale cached plan (a cached
+        // read of `corpusRoot` canonicalizes equal to a fresh one
+        // and would serve the old file listing)
+      } finally graft.operators.Caches.release()
+      ()
+    }
 
   /** Streaming int8-ANN-index maintenance — the trivial member of the
     * index-loop family: each micro-batch of embeddings lands
@@ -608,32 +580,28 @@ object Streams {
       corpusRoot: String, checkpoint: String, idCol: String = "vec_id",
       vecCol: String = "embedding")
       : org.apache.spark.sql.streaming.StreamingQuery =
-    emb.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val spark = batch.sparkSession
-        if (!batch.isEmpty) try {
-          val b = batch.select(col(idCol), col(vecCol))
-          b.coalesce(4).write.mode("overwrite")
-            .parquet(s"$corpusRoot/batch=$id")
-          if (!graft.io.IndexPaths.complete(spark, indexPath))
-            graft.operators.Similarity.writeQuantizedIndex(
-              spark.read.parquet(corpusRoot).select(col(idCol), col(vecCol)),
-              idCol, vecCol, indexPath)
-          else {
-            val fresh = b.join(
-              spark.read.parquet(indexPath)
-                .select(col("vec_id").as("__stored")),
-              col(idCol) === col("__stored"), "left_anti")
-            if (!fresh.isEmpty)
-              graft.operators.Similarity.appendToQuantizedIndex(fresh,
-                indexPath, idCol, vecCol)
-          }
-        } finally graft.operators.Caches.release()
-        ()
-      }
-      .outputMode("append")
-      .start()
+    batchLoop(emb, checkpoint) { (batch, id) =>
+      val spark = batch.sparkSession
+      if (!batch.isEmpty) try {
+        val b = batch.select(col(idCol), col(vecCol))
+        b.coalesce(4).write.mode("overwrite")
+          .parquet(s"$corpusRoot/batch=$id")
+        if (!graft.io.IndexPaths.complete(spark, indexPath))
+          graft.operators.Similarity.writeQuantizedIndex(
+            spark.read.parquet(corpusRoot).select(col(idCol), col(vecCol)),
+            idCol, vecCol, indexPath)
+        else {
+          val fresh = b.join(
+            spark.read.parquet(indexPath)
+              .select(col("vec_id").as("__stored")),
+            col(idCol) === col("__stored"), "left_anti")
+          if (!fresh.isEmpty)
+            graft.operators.Similarity.appendToQuantizedIndex(fresh,
+              indexPath, idCol, vecCol)
+        }
+      } finally graft.operators.Caches.release()
+      ()
+    }
 
   /** Streaming sign-code-ANN-index maintenance — the binary sibling
     * of [[ingestQuantizedStream]] and the loop the sign rung's
@@ -648,16 +616,12 @@ object Streams {
       corpusRoot: String, checkpoint: String, idCol: String = "vec_id",
       vecCol: String = "embedding", dim: Int = 64)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    emb.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        try graft.operators.Similarity.ingestSignBatch(batch, id,
-          indexPath, corpusRoot, idCol, vecCol, dim)
-        finally graft.operators.Caches.release()
-        ()
-      }
-      .outputMode("append")
-      .start()
+    batchLoop(emb, checkpoint) { (batch, id) =>
+      try graft.operators.Similarity.ingestSignBatch(batch, id,
+        indexPath, corpusRoot, idCol, vecCol, dim)
+      finally graft.operators.Caches.release()
+      ()
+    }
 
   /** Streaming perceptual-code-index maintenance — one loop serving
     * BOTH single-long code families (image aHash, audio fingerprint):
@@ -669,16 +633,12 @@ object Streams {
   def ingestCodeStream(codes: DataFrame, indexPath: String,
       corpusRoot: String, checkpoint: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    codes.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        try graft.operators.Multimodal.ingestCodeBatch(batch, id,
-          indexPath, corpusRoot)
-        finally graft.operators.Caches.release()
-        ()
-      }
-      .outputMode("append")
-      .start()
+    batchLoop(codes, checkpoint) { (batch, id) =>
+      try graft.operators.Multimodal.ingestCodeBatch(batch, id,
+        indexPath, corpusRoot)
+      finally graft.operators.Caches.release()
+      ()
+    }
 
   /** Streaming frame-index maintenance — the video modality's loop
     * (image/audio codes stream through [[ingestCodeStream]]): media
@@ -692,16 +652,12 @@ object Streams {
   def ingestFrameStream(media: DataFrame, indexPath: String,
       corpusRoot: String, checkpoint: String, frameSize: Int = 32)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    media.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        try graft.operators.Multimodal.ingestFrameBatch(batch, id,
-          indexPath, corpusRoot, frameSize)
-        finally graft.operators.Caches.release()
-        ()
-      }
-      .outputMode("append")
-      .start()
+    batchLoop(media, checkpoint) { (batch, id) =>
+      try graft.operators.Multimodal.ingestFrameBatch(batch, id,
+        indexPath, corpusRoot, frameSize)
+      finally graft.operators.Caches.release()
+      ()
+    }
 
   /** Streaming chunk-MANIFEST maintenance — the loop behind the
     * media-redundancy audit's stored form: each media micro-batch's
@@ -722,22 +678,17 @@ object Streams {
       minLen: Int = 16, family: String = "md5", compactEvery: Int = 0,
       keepLast: Int = 1)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    media.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val spark = batch.sparkSession
-        // unconditional roll-forward, cf. ingestDedupStream
-        graft.io.Compaction.recover(spark, s"$manifestPath/batch=-1")
-        if (!batch.isEmpty)
-          graft.operators.Multimodal.appendToChunkIndex(batch,
-            manifestPath, id, w, modulus, minLen, family = family)
-        if (compactEvery > 0 && (id + 1) % compactEvery == 0)
-          graft.operators.Multimodal.compactChunkIndex(spark,
-            manifestPath, keepLast = keepLast)
-        ()
-      }
-      .outputMode("append")
-      .start()
+    batchLoop(media, checkpoint,
+        Seq(s"$manifestPath/batch=-1")) { (batch, id) =>
+      val spark = batch.sparkSession
+      if (!batch.isEmpty)
+        graft.operators.Multimodal.appendToChunkIndex(batch,
+          manifestPath, id, w, modulus, minLen, family = family)
+      if (compactEvery > 0 && (id + 1) % compactEvery == 0)
+        graft.operators.Multimodal.compactChunkIndex(spark,
+          manifestPath, keepLast = keepLast)
+      ()
+    }
 
   /** The streaming CDC dedup-on-arrival loop — the chunk store's
     * missing driver: each media micro-batch is chunked once, its
@@ -760,20 +711,14 @@ object Streams {
       modulus: Int = 64, minLen: Int = 16, family: String = "md5",
       compactEvery: Int = 0)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    media.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val spark = batch.sparkSession
-        // unconditional roll-forward, cf. ingestDedupStream
-        graft.io.Compaction.recover(spark, indexPath)
-        graft.operators.Multimodal.ingestCdcBatch(batch, id, indexPath,
-          auditRoot, w, modulus, minLen, family)
-        if (compactEvery > 0 && (id + 1) % compactEvery == 0)
-          graft.io.Compaction.compactDir(spark, indexPath, targetFiles = 8)
-        ()
-      }
-      .outputMode("append")
-      .start()
+    batchLoop(media, checkpoint, Seq(indexPath)) { (batch, id) =>
+      val spark = batch.sparkSession
+      graft.operators.Multimodal.ingestCdcBatch(batch, id, indexPath,
+        auditRoot, w, modulus, minLen, family)
+      if (compactEvery > 0 && (id + 1) % compactEvery == 0)
+        graft.io.Compaction.compactDir(spark, indexPath, targetFiles = 8)
+      ()
+    }
 
   /** Streaming BM25-index maintenance — the REBUILD-ONLY member of the
     * index-loop family: document batches land exactly-once in
@@ -796,34 +741,28 @@ object Streams {
       maxDriftPpm: Long = 400000L, driftMinCount: Long = 5L,
       rebuildEvery: Int = 0)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val spark = batch.sparkSession
-        if (!batch.isEmpty) try {
-          val b = batch.select(col(idCol), col(textCol))
-          b.coalesce(4).write.mode("overwrite")
-            .parquet(s"$corpusRoot/batch=$id")
-          def corpus = spark.read.parquet(corpusRoot)
-            .select(col(idCol), col(textCol))
-          if (!graft.io.IndexPaths.complete(spark, indexPath)) {
-            graft.operators.Retrieval.writeBm25Index(corpus, idCol,
-              textCol, indexPath, coalesceTo = 8)
-            graft.operators.Retrieval.invalidateBm25Index(indexPath)
-          } else if (rebuildEvery > 0 && (id + 1) % rebuildEvery == 0) {
-            graft.operators.Retrieval.writeBm25Index(corpus, idCol,
-              textCol, indexPath, coalesceTo = 8)
-            graft.operators.Retrieval.invalidateBm25Index(indexPath)
-          } else if (checkDriftEvery > 0 &&
-              (id + 1) % checkDriftEvery == 0)
-            graft.operators.Retrieval.refreshBm25IndexIfDrifted(spark,
-              corpus, idCol, textCol, indexPath, b, textCol,
-              maxDriftPpm, driftMinCount)
-        } finally graft.operators.Caches.release()
-        ()
-      }
-      .outputMode("append")
-      .start()
+    batchLoop(docs, checkpoint) { (batch, id) =>
+      val spark = batch.sparkSession
+      if (!batch.isEmpty) try {
+        val b = batch.select(col(idCol), col(textCol))
+        b.coalesce(4).write.mode("overwrite")
+          .parquet(s"$corpusRoot/batch=$id")
+        def corpus = spark.read.parquet(corpusRoot)
+          .select(col(idCol), col(textCol))
+        if (!graft.io.IndexPaths.complete(spark, indexPath))
+          graft.operators.Retrieval.writeBm25Index(corpus, idCol,
+            textCol, indexPath, coalesceTo = 8)
+        else if (rebuildEvery > 0 && (id + 1) % rebuildEvery == 0)
+          graft.operators.Retrieval.writeBm25Index(corpus, idCol,
+            textCol, indexPath, coalesceTo = 8)
+        else if (checkDriftEvery > 0 &&
+            (id + 1) % checkDriftEvery == 0)
+          graft.operators.Retrieval.refreshBm25IndexIfDrifted(spark,
+            corpus, idCol, textCol, indexPath, b, textCol,
+            maxDriftPpm, driftMinCount)
+      } finally graft.operators.Caches.release()
+      ()
+    }
 
   /** Streaming kNN-GRAPH maintenance — the ingest loop for the stored
     * kNN index ([[graft.operators.Similarity.knnWriteIndex]]): each
@@ -845,50 +784,46 @@ object Streams {
       nBands: Int = 8, dim: Int = 0, maxBucket: Int = 64,
       checkDriftEvery: Int = 0, driftThreshold: Double = 4.0)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    emb.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val spark = batch.sparkSession
-        if (!batch.isEmpty) try {
-          val b = batch.select(col(idCol), col(vecCol))
-          b.coalesce(4).write.mode("overwrite")
-            .parquet(s"$corpusRoot/batch=$id")
-          // one accumulated-corpus read serves both the rebuild and the
-          // append's candidate-vector fetch: the fetch semi-joins on
-          // STORED ids, so the current batch's own rows filter out
-          def corpus = spark.read.parquet(corpusRoot)
-            .select(col(idCol), col(vecCol))
-          if (!(graft.io.IndexPaths.complete(spark, indexPath) &&
-              graft.io.IndexPaths.complete(spark,
-                graft.operators.Similarity.knnBucketsPath(indexPath)) &&
-              graft.io.IndexPaths.complete(spark,
-                graft.operators.Similarity.knnBuildStatsPath(indexPath))))
-            graft.operators.Similarity.rebuildKnnIndex(corpus, idCol,
-              vecCol, indexPath, k, nPlanes, nBands, dim, maxBucket)
-          else {
-            val rebuilt = checkDriftEvery > 0 &&
-              (id + 1) % checkDriftEvery == 0 &&
-              graft.operators.Similarity.rebuildKnnIndexIfDrifted(
-                corpus, b, indexPath, idCol, vecCol, k, nPlanes, nBands,
-                dim, maxBucket, driftThreshold)
-            if (!rebuilt) {
-              // replay guard at the loop level too: only ids absent
-              // from the edge table fold (appendToKnnIndex re-guards)
-              val fresh = b.join(
-                spark.read.parquet(indexPath)
-                  .select(col("id").as("__stored")),
-                col(idCol) === col("__stored"), "left_anti")
-              if (!fresh.isEmpty)
-                graft.operators.Similarity.appendToKnnIndex(fresh,
-                  corpus, indexPath, idCol, vecCol, k, nPlanes,
-                  nBands, dim, maxBucket)
-            }
+    batchLoop(emb, checkpoint) { (batch, id) =>
+      val spark = batch.sparkSession
+      if (!batch.isEmpty) try {
+        val b = batch.select(col(idCol), col(vecCol))
+        b.coalesce(4).write.mode("overwrite")
+          .parquet(s"$corpusRoot/batch=$id")
+        // one accumulated-corpus read serves both the rebuild and the
+        // append's candidate-vector fetch: the fetch semi-joins on
+        // STORED ids, so the current batch's own rows filter out
+        def corpus = spark.read.parquet(corpusRoot)
+          .select(col(idCol), col(vecCol))
+        if (!(graft.io.IndexPaths.complete(spark, indexPath) &&
+            graft.io.IndexPaths.complete(spark,
+              graft.operators.Similarity.knnBucketsPath(indexPath)) &&
+            graft.io.IndexPaths.complete(spark,
+              graft.operators.Similarity.knnBuildStatsPath(indexPath))))
+          graft.operators.Similarity.rebuildKnnIndex(corpus, idCol,
+            vecCol, indexPath, k, nPlanes, nBands, dim, maxBucket)
+        else {
+          val rebuilt = checkDriftEvery > 0 &&
+            (id + 1) % checkDriftEvery == 0 &&
+            graft.operators.Similarity.rebuildKnnIndexIfDrifted(
+              corpus, b, indexPath, idCol, vecCol, k, nPlanes, nBands,
+              dim, maxBucket, driftThreshold)
+          if (!rebuilt) {
+            // replay guard at the loop level too: only ids absent
+            // from the edge table fold (appendToKnnIndex re-guards)
+            val fresh = b.join(
+              spark.read.parquet(indexPath)
+                .select(col("id").as("__stored")),
+              col(idCol) === col("__stored"), "left_anti")
+            if (!fresh.isEmpty)
+              graft.operators.Similarity.appendToKnnIndex(fresh,
+                corpus, indexPath, idCol, vecCol, k, nPlanes,
+                nBands, dim, maxBucket)
           }
-        } finally graft.operators.Caches.release()
-        ()
-      }
-      .outputMode("append")
-      .start()
+        }
+      } finally graft.operators.Caches.release()
+      ()
+    }
 
   /** The streaming DATASET-CARD maintenance loop — the governance
     * artifact kept current BY the ingest instead of recomputed from
@@ -911,31 +846,23 @@ object Streams {
       textCol: String = "text", sourceCol: String = "source",
       compactEvery: Int = 0, calibrationPath: Option[String] = None)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val spark = batch.sparkSession
-        // heal a torn compaction swap before this batch's fold (and
-        // before any concurrent cardFromIndex read would miss rows) —
-        // unconditional, cf. ingestDedupStream
-        for (sub <- Seq("stats", "langs", "hashes"))
-          graft.io.Compaction.recover(spark, s"$cardPath/$sub/batch=-1")
-        if (!batch.isEmpty) {
-          graft.operators.TextAnalysis.appendToCardIndex(batch, idCol,
-            textCol, sourceCol, cardPath, id)
-          // one loop can maintain BOTH governance artifacts: the score
-          // histogram folds alongside the card partials, so release
-          // thresholds (calibrationThresholds) are always current
-          calibrationPath.foreach(p =>
-            graft.operators.TextAnalysis.appendToCalibrationIndex(batch,
-              idCol, textCol, sourceCol, p, id))
-        }
-        if (compactEvery > 0 && (id + 1) % compactEvery == 0)
-          graft.operators.TextAnalysis.compactCardIndex(spark, cardPath)
-        ()
+    batchLoop(docs, checkpoint, Seq("stats", "langs", "hashes")
+        .map(sub => s"$cardPath/$sub/batch=-1")) { (batch, id) =>
+      val spark = batch.sparkSession
+      if (!batch.isEmpty) {
+        graft.operators.TextAnalysis.appendToCardIndex(batch, idCol,
+          textCol, sourceCol, cardPath, id)
+        // one loop can maintain BOTH governance artifacts: the score
+        // histogram folds alongside the card partials, so release
+        // thresholds (calibrationThresholds) are always current
+        calibrationPath.foreach(p =>
+          graft.operators.TextAnalysis.appendToCalibrationIndex(batch,
+            idCol, textCol, sourceCol, p, id))
       }
-      .outputMode("append")
-      .start()
+      if (compactEvery > 0 && (id + 1) % compactEvery == 0)
+        graft.operators.TextAnalysis.compactCardIndex(spark, cardPath)
+      ()
+    }
 
   /** Streaming MEMORIZATION-index maintenance — [[ingestCardStream]]'s
     * shape for the singleton-gram audit: each batch folds its gram
@@ -950,22 +877,17 @@ object Streams {
       checkpoint: String, idCol: String = "doc_id",
       textCol: String = "text", n: Int = 4, compactEvery: Int = 0)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val spark = batch.sparkSession
-        for (sub <- Seq("grams", "stats"))
-          graft.io.Compaction.recover(spark, s"$memPath/$sub/batch=-1")
-        if (!batch.isEmpty)
-          graft.operators.TextAnalysis.appendToMemorizationIndex(batch,
-            idCol, textCol, memPath, id, n)
-        if (compactEvery > 0 && (id + 1) % compactEvery == 0)
-          graft.operators.TextAnalysis.compactMemorizationIndex(spark,
-            memPath)
-        ()
-      }
-      .outputMode("append")
-      .start()
+    batchLoop(docs, checkpoint, Seq("grams", "stats")
+        .map(sub => s"$memPath/$sub/batch=-1")) { (batch, id) =>
+      val spark = batch.sparkSession
+      if (!batch.isEmpty)
+        graft.operators.TextAnalysis.appendToMemorizationIndex(batch,
+          idCol, textCol, memPath, id, n)
+      if (compactEvery > 0 && (id + 1) % compactEvery == 0)
+        graft.operators.TextAnalysis.compactMemorizationIndex(spark,
+          memPath)
+      ()
+    }
 
   /** Streaming kmeans-index maintenance — [[ingestPqStream]]'s shape
     * for the clustering index: batches land exactly-once in
@@ -982,42 +904,38 @@ object Streams {
       vecCol: String = "embedding", k: Int = 8, iters: Int = 2,
       checkDriftEvery: Int = 0, driftThreshold: Double = 2.0)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    emb.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val spark = batch.sparkSession
-        if (!batch.isEmpty) try {
-          val b = batch.select(col(idCol), col(vecCol))
-          b.coalesce(4).write.mode("overwrite")
-            .parquet(s"$corpusRoot/batch=$id")
-          def corpus = spark.read.parquet(corpusRoot)
-            .select(col(idCol), col(vecCol))
-          if (!graft.io.IndexPaths.complete(spark, indexPath))
-            graft.operators.Similarity.rebuildKmeansIndex(corpus,
-              indexPath, idCol, vecCol, k, iters)
-          else {
-            val rebuilt = checkDriftEvery > 0 &&
-              (id + 1) % checkDriftEvery == 0 &&
-              graft.operators.Similarity.rebuildKmeansIndexIfDrifted(
-                corpus, b, indexPath, idCol, vecCol, k, iters,
-                driftThreshold)
-            if (!rebuilt) {
-              val fresh = b.join(
-                spark.read.parquet(indexPath)
-                  .select(col(idCol).as("__stored")),
-                col(idCol) === col("__stored"), "left_anti")
-              if (!fresh.isEmpty)
-                graft.operators.Similarity.appendToKmeansIndex(fresh,
-                  indexPath, idCol, vecCol)
-            }
+    batchLoop(emb, checkpoint) { (batch, id) =>
+      val spark = batch.sparkSession
+      if (!batch.isEmpty) try {
+        val b = batch.select(col(idCol), col(vecCol))
+        b.coalesce(4).write.mode("overwrite")
+          .parquet(s"$corpusRoot/batch=$id")
+        def corpus = spark.read.parquet(corpusRoot)
+          .select(col(idCol), col(vecCol))
+        if (!graft.io.IndexPaths.complete(spark, indexPath))
+          graft.operators.Similarity.rebuildKmeansIndex(corpus,
+            indexPath, idCol, vecCol, k, iters)
+        else {
+          val rebuilt = checkDriftEvery > 0 &&
+            (id + 1) % checkDriftEvery == 0 &&
+            graft.operators.Similarity.rebuildKmeansIndexIfDrifted(
+              corpus, b, indexPath, idCol, vecCol, k, iters,
+              driftThreshold)
+          if (!rebuilt) {
+            val fresh = b.join(
+              spark.read.parquet(indexPath)
+                .select(col(idCol).as("__stored")),
+              col(idCol) === col("__stored"), "left_anti")
+            if (!fresh.isEmpty)
+              graft.operators.Similarity.appendToKmeansIndex(fresh,
+                indexPath, idCol, vecCol)
           }
-          // release per batch — cf. ingestPqStream (stale cached
-          // corpus-read plans; kmeansFixedPoint tracks its persist)
-        } finally graft.operators.Caches.release()
-        ()
-      }
-      .outputMode("append")
-      .start()
+        }
+        // release per batch — cf. ingestPqStream (stale cached
+        // corpus-read plans; kmeansFixedPoint tracks its persist)
+      } finally graft.operators.Caches.release()
+      ()
+    }
 
   /** The streaming MODEL-maintenance loop — the lifecycle twin of
     * [[ingestKmeansStream]] for the distilled quality model
@@ -1041,31 +959,27 @@ object Streams {
       checkDriftEvery: Int = 0, maxDriftPpm: Long = 400000L,
       driftMinCount: Long = 5L)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val spark = batch.sparkSession
-        if (!batch.isEmpty) try {
-          val b = batch.select(col(idCol), col(textCol))
-          b.coalesce(4).write.mode("overwrite")
-            .parquet(s"$corpusRoot/batch=$id")
-          def corpus = spark.read.parquet(corpusRoot)
-            .select(col(idCol), col(textCol))
-          if (!graft.io.IndexPaths.complete(spark, modelPath)) {
-            val c = corpus
-            graft.operators.TextAnalysis.writeQualityModel(
-              graft.operators.TextAnalysis.distillQualityModel(c, idCol,
-                textCol, dim, iters),
-              modelPath, c, textCol)
-          } else if (checkDriftEvery > 0 && (id + 1) % checkDriftEvery == 0)
-            graft.operators.TextAnalysis.rebuildQualityModelIfDrifted(
-              corpus, b, modelPath, idCol, textCol, dim, iters,
-              maxDriftPpm, driftMinCount)
-        } finally graft.operators.Caches.release()
-        ()
-      }
-      .outputMode("append")
-      .start()
+    batchLoop(docs, checkpoint) { (batch, id) =>
+      val spark = batch.sparkSession
+      if (!batch.isEmpty) try {
+        val b = batch.select(col(idCol), col(textCol))
+        b.coalesce(4).write.mode("overwrite")
+          .parquet(s"$corpusRoot/batch=$id")
+        def corpus = spark.read.parquet(corpusRoot)
+          .select(col(idCol), col(textCol))
+        if (!graft.io.IndexPaths.complete(spark, modelPath)) {
+          val c = corpus
+          graft.operators.TextAnalysis.writeQualityModel(
+            graft.operators.TextAnalysis.distillQualityModel(c, idCol,
+              textCol, dim, iters),
+            modelPath, c, textCol)
+        } else if (checkDriftEvery > 0 && (id + 1) % checkDriftEvery == 0)
+          graft.operators.TextAnalysis.rebuildQualityModelIfDrifted(
+            corpus, b, modelPath, idCol, textCol, dim, iters,
+            maxDriftPpm, driftMinCount)
+      } finally graft.operators.Caches.release()
+      ()
+    }
 
   case class OpenSession(startMicros: Long, lastMicros: Long, events: Long)
   case class ClosedSession(user_id: Long, s_start: java.sql.Timestamp,
@@ -1429,38 +1343,34 @@ object Streams {
       w: Int = 4, minShared: Int = 2, maxDf: Int = 50,
       checkDriftEvery: Int = 0, driftThresholdPpm: Long = 500000L)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val spark = batch.sparkSession
-        if (!batch.isEmpty) try {
-          val b = batch.select(col(idCol), col(textCol))
-          b.coalesce(4).write.mode("overwrite")
-            .parquet(s"$corpusRoot/batch=$id")
-          def corpus = spark.read.parquet(corpusRoot)
-          if (!graft.io.IndexPaths.complete(spark, indexPath))
-            graft.operators.Dedup.writeWinnowIndex(corpus, idCol,
-              textCol, indexPath, k, w, coalesceTo = 4)
-          else {
-            graft.operators.Dedup.incrementalWinnowPairs(b, spark,
-                indexPath, idCol, textCol, k, w, minShared, maxDf)
-              .coalesce(1).write.mode("overwrite")
-              .parquet(s"$suspectsRoot/batch=$id")
-            // the alarm wrapper folds the batch itself on the quiet
-            // path, so exactly one of the two calls runs per batch
-            if (checkDriftEvery > 0 && (id + 1) % checkDriftEvery == 0)
-              graft.operators.Dedup.rebuildWinnowIndexIfDrifted(
-                corpus, b, spark, indexPath, idCol, textCol,
-                driftThresholdPpm, k, w)
-            else
-              graft.operators.Dedup.appendToWinnowIndex(b, spark,
-                indexPath, idCol, textCol, k, w)
-          }
-        } finally graft.operators.Caches.release()
-        ()
-      }
-      .outputMode("append")
-      .start()
+    batchLoop(docs, checkpoint) { (batch, id) =>
+      val spark = batch.sparkSession
+      if (!batch.isEmpty) try {
+        val b = batch.select(col(idCol), col(textCol))
+        b.coalesce(4).write.mode("overwrite")
+          .parquet(s"$corpusRoot/batch=$id")
+        def corpus = spark.read.parquet(corpusRoot)
+        if (!graft.io.IndexPaths.complete(spark, indexPath))
+          graft.operators.Dedup.writeWinnowIndex(corpus, idCol,
+            textCol, indexPath, k, w, coalesceTo = 4)
+        else {
+          graft.operators.Dedup.incrementalWinnowPairs(b, spark,
+              indexPath, idCol, textCol, k, w, minShared, maxDf)
+            .coalesce(1).write.mode("overwrite")
+            .parquet(s"$suspectsRoot/batch=$id")
+          // the alarm wrapper folds the batch itself on the quiet
+          // path, so exactly one of the two calls runs per batch
+          if (checkDriftEvery > 0 && (id + 1) % checkDriftEvery == 0)
+            graft.operators.Dedup.rebuildWinnowIndexIfDrifted(
+              corpus, b, spark, indexPath, idCol, textCol,
+              driftThresholdPpm, k, w)
+          else
+            graft.operators.Dedup.appendToWinnowIndex(b, spark,
+              indexPath, idCol, textCol, k, w)
+        }
+      } finally graft.operators.Caches.release()
+      ()
+    }
 
   /** Streaming COUNT-MIN maintenance — [[ingestCardStream]]'s shape
     * for the frequency sketch: each batch folds its additive cell
@@ -1475,23 +1385,18 @@ object Streams {
       checkpoint: String, textCol: String = "text", depth: Int = 4,
       width: Int = 256, candidates: Int = 24, compactEvery: Int = 0)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val spark = batch.sparkSession
-        for (sub <- Seq("cells", "cand"))
-          graft.io.Compaction.recover(spark, s"$cmsPath/$sub/batch=-1")
-        if (!batch.isEmpty)
-          graft.operators.Sketches.appendToCmsIndex(
-            batch.select(explode(graft.functions.TextFns
-              .letterTokens(col(textCol))).as("term")),
-            col("term"), cmsPath, id, depth, width, candidates)
-        if (compactEvery > 0 && (id + 1) % compactEvery == 0)
-          graft.operators.Sketches.compactCmsIndex(spark, cmsPath)
-        ()
-      }
-      .outputMode("append")
-      .start()
+    batchLoop(docs, checkpoint, Seq("cells", "cand")
+        .map(sub => s"$cmsPath/$sub/batch=-1")) { (batch, id) =>
+      val spark = batch.sparkSession
+      if (!batch.isEmpty)
+        graft.operators.Sketches.appendToCmsIndex(
+          batch.select(explode(graft.functions.TextFns
+            .letterTokens(col(textCol))).as("term")),
+          col("term"), cmsPath, id, depth, width, candidates)
+      if (compactEvery > 0 && (id + 1) % compactEvery == 0)
+        graft.operators.Sketches.compactCmsIndex(spark, cmsPath)
+      ()
+    }
 
   /** Streaming DSIR-PROFILE maintenance — the importance weight table
     * kept current BY the ingest: each batch folds its additive
@@ -1506,19 +1411,15 @@ object Streams {
       textCol: String = "text", buckets: Int = 4096,
       compactEvery: Int = 0)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val spark = batch.sparkSession
-        graft.io.Compaction.recover(spark, s"$impPath/prof/batch=-1")
-        if (!batch.isEmpty)
-          graft.operators.TextAnalysis.appendToImportanceIndex(batch,
-            idCol, textCol, targetPred, impPath, id, buckets)
-        if (compactEvery > 0 && (id + 1) % compactEvery == 0)
-          graft.operators.TextAnalysis.compactImportanceIndex(spark,
-            impPath)
-        ()
-      }
-      .outputMode("append")
-      .start()
+    batchLoop(docs, checkpoint,
+        Seq(s"$impPath/prof/batch=-1")) { (batch, id) =>
+      val spark = batch.sparkSession
+      if (!batch.isEmpty)
+        graft.operators.TextAnalysis.appendToImportanceIndex(batch,
+          idCol, textCol, targetPred, impPath, id, buckets)
+      if (compactEvery > 0 && (id + 1) % compactEvery == 0)
+        graft.operators.TextAnalysis.compactImportanceIndex(spark,
+          impPath)
+      ()
+    }
 }

@@ -4,19 +4,21 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.SparkSession
 
-/** Round-13 optimization evidence: dumps `.explain("formatted")` for a
-  * list of queries into plans/r13/<query>_<tag>.txt (tag = "before" /
-  * "after"), one JVM for the whole batch so the dump is cheap.
+/** Optimization evidence: dumps `.explain("formatted")` for a list of
+  * queries into <outDir>/<query>_<tag>.txt (tag = "before" / "after"),
+  * one JVM for the whole batch so the dump is cheap.
   *
-  * usage: runMain graft.tools.PlansR13 <tag> <q1> <q2> ... [--sf <dir>]
+  * usage: runMain graft.tools.Plans <outDir> <tag> <q1> <q2> ... [--sf <dir>]
+  * (e.g. outDir `plans/r12`)
   */
-object PlansR13 {
+object Plans {
   def main(args: Array[String]): Unit = {
-    val tag = args(0)
+    val outDir = Paths.get(args(0))
+    val tag = args(1)
     val sfIdx = args.indexOf("--sf")
     val sfDir = if (sfIdx >= 0) args(sfIdx + 1) else "/root/testdata/sf0.1"
     val names =
-      (if (sfIdx >= 0) args.slice(1, sfIdx) else args.drop(1)).toSeq
+      (if (sfIdx >= 0) args.slice(2, sfIdx) else args.drop(2)).toSeq
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -26,10 +28,9 @@ object PlansR13 {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val outDir = Paths.get("plans/r13")
     Files.createDirectories(outDir)
     for (name <- names) {
-      spark.sparkContext.setJobDescription(s"plansR12: $name")
+      spark.sparkContext.setJobDescription(s"plans: $name")
       val t0 = System.nanoTime()
       try {
         val df = graft.SparkEntry.queries(name)(spark, sfDir)

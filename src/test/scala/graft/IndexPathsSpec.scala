@@ -1,10 +1,8 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
-
 import graft.io.IndexPaths
 
-class IndexPathsSpec extends AnyFunSuite {
+class IndexPathsSpec extends SparkSpec {
 
   test("distinct source dirs map to distinct index paths") {
     val a = IndexPaths.indexPath("bandidx",
@@ -33,5 +31,24 @@ class IndexPathsSpec extends AnyFunSuite {
     val after = IndexPaths.indexPath("ivf", f.toString, "c16")
     assert(before != after,
       "rewriting the source under the same path must yield a fresh index path")
+  }
+
+  test("a non-local source fingerprints through the session's FileSystem") {
+    // a viewfs mount over a temp dir: the source is reachable only
+    // through Hadoop, so a java.io.File view sees nothing and would
+    // key both versions identically (the stale-index bug)
+    val dir = java.nio.file.Files.createTempDirectory("graft_idxpaths_viewfs")
+    spark.sparkContext.hadoopConfiguration.set(
+      "fs.viewfs.mounttable.graftidx.link./data", dir.toUri.toString)
+    val f = dir.resolve("data.parquet").toFile
+    val src = "viewfs://graftidx/data/data.parquet"
+    val w = new java.io.PrintWriter(f); w.print("v1"); w.close()
+    f.setLastModified(1000000000000L)
+    val before = IndexPaths.indexPath("ivf", src, "c16")
+    val w2 = new java.io.PrintWriter(f); w2.print("regenerated"); w2.close()
+    f.setLastModified(1700000000000L)
+    val after = IndexPaths.indexPath("ivf", src, "c16")
+    assert(before != after,
+      "rewriting a non-local source must yield a fresh index path")
   }
 }

@@ -256,7 +256,6 @@ class SimilaritySpec extends SparkSpec {
     Similarity.kmeansWriteIndex(train, "vec_id", "embedding", torn,
       k = 8, iters = 1)
     assert(new java.io.File(torn, "_SUCCESS").delete())
-    Similarity.invalidateKmeansIndex(torn)
     val ex = intercept[IllegalArgumentException] {
       Similarity.semanticDecontaminateBlocked(spark, train, evalSet,
         "vec_id", "embedding", tau = 0.95, torn, nProbe = 2)
@@ -477,7 +476,6 @@ class SimilaritySpec extends SparkSpec {
     // torn buckets sibling (no _SUCCESS) reads as absent: ensure rebuilds
     assert(new java.io.File(Similarity.knnBucketsPath(path), "_SUCCESS")
       .delete())
-    Similarity.invalidateKnnIndex(path)
     Similarity.ensureKnnIndex(corpus, "vec_id", "embedding", path, k = 5)
     assert(graft.io.IndexPaths.complete(spark,
       Similarity.knnBucketsPath(path)), "torn sibling must rebuild")
@@ -735,7 +733,6 @@ class SimilaritySpec extends SparkSpec {
     // dying between the index write and the centroid write leaves behind
     val marker = new java.io.File(Similarity.centroidsPath(dir), "_SUCCESS")
     assert(marker.delete(), "test setup: centroid _SUCCESS must exist")
-    Similarity.invalidateIvfIndex(dir)
     val again = Similarity.ivfTopKIndexed(spark, emb, "vec_id", "embedding",
       dir, probeId = 0L, k = 10).collect().map(_.toString).toSeq
     assert(first == again, "rebuild over the same corpus must reproduce results")
@@ -1375,7 +1372,6 @@ class SimilaritySpec extends SparkSpec {
     val path3 = s"$dir/signidx_torn"
     Similarity.writeSignIndex(emb, "vec_id", "embedding", path3)
     new java.io.File(path3, "_SUCCESS").delete()
-    Similarity.invalidateSignIndex(path3)
     assert(rows(Similarity.hammingTopKIndexedBatch(spark, emb, "vec_id",
       "embedding", path3, probeIds, k = 10)) === adhoc)
     assert(graft.io.IndexPaths.complete(spark, path3))
