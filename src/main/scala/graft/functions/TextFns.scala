@@ -4,37 +4,33 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Text primitives shared by the word-count, dedup, and text-analysis
-  * operators. All are Catalyst `functions._` compositions (codegen'd,
-  * no UDFs) so they stay inside whole-stage codegen.
+  * operators. The tokenizers and `wordNGrams` are native one-pass
+  * kernels ([[graft.functions.expr.Tokens]] and its
+  * siblings in `expr/TextKernels.scala`): one byte loop per document in
+  * place of `split` + `filter`/`transform` lambda chains, which Spark
+  * interprets per element. Outputs, null handling included, are those
+  * of the compositions they replaced (`TextKernelsSpec`).
   */
 object TextFns {
+
+  import org.apache.spark.sql.graft.{shim => ExpressionUtils}
+  import graft.functions.expr.{Tokens, WordNGrams}
 
   /** The reference's tokenizer, exactly (SURVEY §1.4-Q6): split on runs
     * of non-letters, case-sensitive, drop empties. Java's `\p{L}` matches
     * Go's `unicode.IsLetter` (`/root/reference/test/wordCount.go:16-19`,
     * `strings.FieldsFunc(contents, c => !unicode.IsLetter(c))`). */
   def letterTokens(c: Column): Column =
-    filter(split(c, "[^\\p{L}]+"), t => length(t) > lit(0))
+    ExpressionUtils.column(Tokens(ExpressionUtils.expression(c), letters = true))
 
-  /** Whitespace tokens (empties dropped). */
+  /** Whitespace tokens (`\s` runs split, empties dropped). */
   def wsTokens(c: Column): Column =
-    filter(split(c, "\\s+"), t => length(t) > lit(0))
-
-  /** Lower-cased letter tokens — the normalization used by language-ID
-    * and fingerprinting. */
-  def lowerTokens(c: Column): Column = letterTokens(lower(c))
+    ExpressionUtils.column(Tokens(ExpressionUtils.expression(c), letters = false))
 
   /** Consecutive word n-grams over a token array, space-joined.
     * Empty array when the document has fewer than n tokens. */
   def wordNGrams(toks: Column, n: Int): Column =
-    when(size(toks) >= n,
-      transform(sequence(lit(0), size(toks) - lit(n)),
-        i => concat_ws(" ", (1 to n).map(j => element_at(toks, i + lit(j))): _*)))
-      .otherwise(array().cast("array<string>"))
-
-  /** How many tokens of `toks` are members of `words`. */
-  def countIn(toks: Column, words: Seq[String]): Column =
-    size(filter(toks, t => t.isin(words: _*)))
+    ExpressionUtils.column(WordNGrams(ExpressionUtils.expression(toks), n))
 
   /** Canonical text normalization for fingerprinting: lower-case,
     * collapse every non-alphanumeric run to one space, trim. */

@@ -2,7 +2,8 @@ package graft.io
 
 import java.util.concurrent.ConcurrentHashMap
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** The one build-once lifecycle every stored derived index shares
   * (BM25 postings, band, containment, winnow, kNN, IVF, PQ, IVF-PQ,
@@ -29,6 +30,9 @@ import org.apache.spark.sql.SparkSession
   * first finishes — and a build that ensures a DIFFERENT index from
   * its closure takes that index's own lock. A failed build throws
   * through and leaves the path unbuilt.
+  *
+  * Reads go through [[read]], which supplies the schema of a committed
+  * table it has read before instead of re-inferring it.
   */
 object StoredIndex {
 
@@ -96,5 +100,30 @@ object StoredIndex {
   private def remember[V <: AnyRef](path: String, v: V): V = {
     values.put(path, v)
     v
+  }
+
+  /** Schema of each table [[read]] has inferred, with the modification
+    * time of the `_SUCCESS` marker it was inferred under. */
+  private val schemas = new ConcurrentHashMap[String, (Long, StructType)]()
+
+  /** `spark.read.parquet(path)` of a committed index table without the
+    * schema-inference job (a footer read) Spark starts for every read
+    * of an unknown schema: the first read of a commit infers and
+    * remembers the schema, later reads of the SAME commit (its
+    * `_SUCCESS` marker unchanged — one `getFileStatus`) supply it. A
+    * rebuild or append rewrites the marker, so the next read infers
+    * afresh; an uncommitted table is always inferred. */
+  def read(spark: SparkSession, path: String): DataFrame = {
+    val marker = new org.apache.hadoop.fs.Path(path, "_SUCCESS")
+    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val stamp =
+      if (fs.exists(marker)) fs.getFileStatus(marker).getModificationTime else -1L
+    Option(schemas.get(path)).filter(m => stamp >= 0 && m._1 == stamp) match {
+      case Some((_, schema)) => spark.read.schema(schema).parquet(path)
+      case None =>
+        val df = spark.read.parquet(path)
+        if (stamp >= 0) schemas.put(path, (stamp, df.schema))
+        df
+    }
   }
 }

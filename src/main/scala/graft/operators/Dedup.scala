@@ -66,20 +66,18 @@ object Dedup {
     * token once (`xxhash64(t)`), then combine each n-window of token
     * hashes with one more `xxhash64(h_i..h_{i+n-1})`. Set-equivalent to
     * hashing the concatenated gram (the combine is injective enough for
-    * MinHash) but skips all string concatenation/allocation — the
-    * dominant cost of the signature stage at corpus scale. One row per
-    * gram occurrence, no shuffle. */
-  def gramHashes(docs: DataFrame, idCol: String, textCol: String, n: Int): DataFrame =
-    docs.select(col(idCol).as("doc_id"),
-        transform(TextFns.letterTokens(col(textCol)), t => xxhash64(t)).as("__th"))
-      .select(col("doc_id"),
-        explode(when(size(col("__th")) >= n,
-          transform(sequence(lit(0), size(col("__th")) - lit(n)),
-            i => xxhash64((1 to n).map(j => element_at(col("__th"), i + lit(j))): _*)))
-          .otherwise(array().cast("array<bigint>"))).as("gh"))
+    * MinHash) but skips all string concatenation/allocation. One native
+    * pass per document ([[graft.functions.expr.GramHashes]]), one row
+    * per gram occurrence, no shuffle. */
+  def gramHashes(docs: DataFrame, idCol: String, textCol: String, n: Int): DataFrame = {
+    import org.apache.spark.sql.graft.shim
+    docs.select(col(idCol).as("doc_id"), explode(shim.column(
+      graft.functions.expr.GramHashes(shim.expression(col(textCol)), n))).as("gh"))
+  }
 
   /** Signatures over pre-hashed grams ([[gramHashes]]) via the long-
-    * input native aggregate — the production signature path. */
+    * input native aggregate — the reference that pins the per-row
+    * [[rowSignatures]] bit-equal (DedupSpec). */
   def minhashSignaturesHashed(gramHs: DataFrame, numHashes: Int): DataFrame = {
     import org.apache.spark.sql.graft.shim
     val sig = shim.column(
@@ -101,32 +99,25 @@ object Dedup {
     grams.groupBy(col("doc_id")).agg(sig.as("sig"))
   }
 
-  /** Per-ROW MinHash signatures as a pure Column expression — NO
+  /** Per-ROW MinHash signatures as one row-local generator — NO
     * aggregation, so it runs on an unbounded stream (the signature step
     * of [[graft.streaming.Streams.nearDupPairsStream]]) and on any
-    * batch slice, at scan speed with zero shuffle. Bit-identical to
-    * [[minhashSignaturesHashed]] (same token-hash → window-combine →
-    * `xxhash64(i, h)` view chain; asserted in DedupSpec): a row's gram
-    * hashes live in one array column, each of the `numHashes` views is
-    * an `array_min` over a per-view mix. Docs with fewer than `ngram`
-    * tokens have no grams — and no signature row (same as the agg path).
-    * Cost is identical to the aggregate path (64 multiply-hash passes
-    * over the row's grams); the difference is WHERE the min runs —
-    * inside the row instead of across a groupBy — which is what makes
-    * it streamable. */
+    * batch slice with zero shuffle; every band operation
+    * ([[docBandBuckets]], [[minhashDedupPairs]]) signs documents here.
+    * Bit-identical to [[minhashSignaturesHashed]] (same token-hash →
+    * window-combine → `xxhash64(i, h)` view chain; asserted in
+    * DedupSpec), computed by one native kernel per document
+    * ([[graft.functions.expr.RowMinHash]]): letter runs, token hashes,
+    * windows and the `numHashes` minima in one pass, where the
+    * aggregate path explodes one row per gram and shuffles a partial
+    * buffer per document. Docs with fewer than `ngram` tokens have no
+    * grams — and no signature row (same as the agg path). */
   def rowSignatures(docs: DataFrame, idCol: String, textCol: String,
       ngram: Int = 3, numHashes: Int = 64): DataFrame = {
-    val th = transform(TextFns.letterTokens(col(textCol)), t => xxhash64(t))
-    docs.select(col(idCol).as("doc_id"), th.as("__th"))
-      .where(size(col("__th")) >= ngram)
-      .select(col("doc_id"),
-        transform(sequence(lit(0), size(col("__th")) - lit(ngram)),
-          i => xxhash64((1 to ngram).map(j =>
-            element_at(col("__th"), i + lit(j))): _*)).as("__gh"))
-      .select(col("doc_id"),
-        array((0 until numHashes).map(i =>
-          array_min(transform(col("__gh"), h => xxhash64(lit(i), h)))): _*)
-          .as("sig"))
+    import org.apache.spark.sql.graft.shim
+    docs.select(col(idCol).as("doc_id"), shim.column(
+      graft.functions.expr.RowMinHash(shim.expression(col(textCol)), ngram,
+        numHashes)).as("sig"))
   }
 
   /** LSH banding: split the signature into `bands` bands of `rows` values;
@@ -180,10 +171,10 @@ object Dedup {
     *    buckets, vanishingly rare even at 100 TB — so the probe join
     *    against the bucket relation broadcasts that tiny overflow
     *    bucket list and keeps `NOT array_contains(kept, id)` members.
-    * Per-bucket output (and work) stays ≤ cap²/2 + (m − cap); the
-    * expensive subtree below `buckets` (signature aggregation) ends in
-    * an exchange shared by the aggregate and star-probe branches, which
-    * AQE computes once (ReusedExchange).
+    * Per-bucket output (and work) stays ≤ cap²/2 + (m − cap). The
+    * aggregate and star-probe branches both read `buckets`: pass a
+    * persisted frame, or the expensive subtree below it (the
+    * signatures) runs once per branch.
     *
     * Returns (id_a, id_b) with id_a < id_b, NOT deduplicated across
     * buckets. */
@@ -243,19 +234,20 @@ object Dedup {
     * 16 bands × 4 rows: P(catch | J=t) = 1-(1-t^4)^16 — ≥0.9998 at
     * t=0.8, indistinguishable from 1 at the J≈0.95 dups real corpora
     * (and this testdata) contain.
-    * Persists the candidate list through [[Caches]] — release with
-    * `Caches.release()` after the consuming action. */
+    * Persists the band buckets and the candidate list through
+    * [[Caches]] — release with `Caches.release()` after the consuming
+    * action. */
   def minhashDedupPairs(docs: DataFrame, idCol: String, textCol: String,
       ngram: Int = 3, numHashes: Int = 64, bands: Int = 16,
       threshold: Double = 0.8, maxBucket: Int = 64): DataFrame = {
-    // Signature path: RAW (non-distinct) gram HASHES stream straight
-    // into the per-doc min-aggregate — duplicates cannot change a min,
-    // so the corpus-wide distinct shuffle is skipped entirely, and no
-    // gram strings are ever built (tokens hashed once, windows combined
-    // hash-to-hash). The only signature-side shuffle is the partial-
-    // aggregated groupBy(doc_id), one 64-long buffer per doc per map
-    // partition.
-    val sigs = minhashSignaturesHashed(gramHashes(docs, idCol, textCol, ngram), numHashes)
+    // Signature path: one per-row kernel per document — no gram
+    // strings, no gram rows, no signature-side shuffle. The buckets
+    // are persisted because the capped pair generator reads them in
+    // three branches (core pairs, overflow buckets, star probe), and
+    // with no exchange below them each branch would re-sign the corpus.
+    val buckets = Caches.persist(
+      lshBandBuckets(rowSignatures(docs, idCol, textCol, ngram, numHashes),
+        bands, numHashes / bands))
     // candidate pairs are tiny (LSH-pruned); persisted because they
     // are consumed twice (id filter + membership join). Persist — NOT
     // checkpoint: the returned pairs frame references this table
@@ -266,8 +258,7 @@ object Dedup {
     // bands reaches the rescore several times, and the rescore's own
     // per-pair aggregation dedups for free — one exchange saved.
     val cands = Caches.persist(
-      cappedBucketPairs(lshBandBuckets(sigs, bands, numHashes / bands),
-          Seq("band", "bucket"), "doc_id", maxBucket)
+      cappedBucketPairs(buckets, Seq("band", "bucket"), "doc_id", maxBucket)
         .toDF("doc_a", "doc_b"))
     jaccardRescore(cands, docs, idCol, textCol, ngram)
       .where(col("jaccard") >= threshold)
@@ -713,8 +704,7 @@ object Dedup {
     * consumer. */
   def docBandBuckets(docs: DataFrame, idCol: String, textCol: String,
       ngram: Int = 3, numHashes: Int = 64, bands: Int = 16): DataFrame =
-    lshBandBuckets(
-      minhashSignaturesHashed(gramHashes(docs, idCol, textCol, ngram), numHashes),
+    lshBandBuckets(rowSignatures(docs, idCol, textCol, ngram, numHashes),
       bands, numHashes / bands)
 
   /** [[writeBandIndex]] over precomputed buckets. `coalesceTo > 0`
@@ -839,8 +829,7 @@ object Dedup {
       newDocs: DataFrame, corpusDocs: DataFrame, indexPath: String,
       idCol: String, textCol: String, ngram: Int = 3,
       threshold: Double = 0.8, maxBucket: Int = 64): DataFrame = {
-    val spark = newDocs.sparkSession
-    val idx = spark.read.parquet(indexPath)
+    val idx = graft.io.StoredIndex.read(newDocs.sparkSession, indexPath)
     val vsCorpus = newBuckets.select(col("band"), col("bucket"),
         col("doc_id").as("n_id"))
       .join(idx.where(col("__r") <= maxBucket)

@@ -849,7 +849,7 @@ object Similarity {
       probeIds: Seq[Long], k: Int, nProbe: Int = 4): DataFrame = {
     require(probeIds.nonEmpty)
     import spark.implicits._
-    val index = spark.read.parquet(path)
+    val index = graft.io.StoredIndex.read(spark, path)
     // probe vectors: |probes| rows to the driver — KBs, size-bounded
     val probeVecs = index.where(col(idCol).isin(probeIds: _*))
       .select(col(idCol), col(vecCol)).collect()

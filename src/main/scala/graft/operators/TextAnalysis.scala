@@ -20,56 +20,49 @@ object TextAnalysis {
     "de" -> Seq("der", "die", "und", "das", "ist", "nicht", "ein", "zu", "mit", "den"),
     "fr" -> Seq("le", "la", "les", "de", "et", "est", "un", "une", "dans", "que"))
 
-  /** Stopword-hit score for one language over lower-cased letter tokens. */
-  def langScore(textCol: Column, lang: String): Column =
-    TextFns.countIn(TextFns.lowerTokens(textCol), stopwords(lang))
+  /** Every per-document count [[quality]] and [[langId]] read, and
+    * langId's decision, from one native pass
+    * ([[graft.functions.expr.TextStats]]): a struct of `ws_tokens`,
+    * `letters`, `han`, `chars`, one stopword score per language
+    * (`en`, `es`, `de`, `fr`) and `pred_lang`. */
+  private def textStats(t: Column): Column = {
+    import org.apache.spark.sql.graft.shim
+    shim.column(new graft.functions.expr.TextStats(shim.expression(t),
+      shim.expression(lower(t)),
+      Seq("en", "es", "de", "fr").map(l => l -> stopwords(l))))
+  }
 
   /** Language-ID: Han-script ratio decides zh (no spaces, stopwords
     * useless there); otherwise argmax of per-language stopword scores
     * with a fixed priority tie-break (en > es > de > fr), 'und' when
-    * nothing matched. */
+    * nothing matched. The scores and the decision come from one
+    * [[textStats]] struct, projected once and then read field by
+    * field. */
   def langId(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val t = col(textCol)
-    val (en, es, de, fr) =
-      (langScore(t, "en"), langScore(t, "es"), langScore(t, "de"), langScore(t, "fr"))
-    // Java regex script class; the DuckDB oracle mirrors with RE2's \p{Han}
-    val han = length(regexp_replace(t, "[^\\p{IsHan}]", ""))
-    docs.select(col(idCol).as("doc_id"),
-      en.as("score_en"), es.as("score_es"), de.as("score_de"), fr.as("score_fr"),
-      han.cast("long").as("han_chars"),
-      predLang(t).as("pred_lang"))
+    val s = col("__s")
+    docs.select(col(idCol).as("doc_id"), textStats(col(textCol)).as("__s"))
+      .select(col("doc_id"),
+        s("en").as("score_en"), s("es").as("score_es"),
+        s("de").as("score_de"), s("fr").as("score_fr"),
+        s("han").cast("long").as("han_chars"),
+        s("pred_lang").as("pred_lang"))
   }
 
   /** The [[langId]] decision as one scalar column — composable into a
     * wider projection so consumers ([[datasetCard]]) predict the
-    * language inside THEIR scan instead of joining langId's output
-    * (the column is pure per-row regex/array expressions; the score
-    * subexpressions dedupe in codegen). */
-  private def predLang(t: Column): Column = {
-    val (en, es, de, fr) =
-      (langScore(t, "en"), langScore(t, "es"), langScore(t, "de"), langScore(t, "fr"))
-    val han = length(regexp_replace(t, "[^\\p{IsHan}]", ""))
-    when(han * 5 > length(t), lit("zh"))
-      .when(en + es + de + fr === 0, lit("und"))
-      .when(en >= es && en >= de && en >= fr, lit("en"))
-      .when(es >= de && es >= fr, lit("es"))
-      .when(de >= fr, lit("de"))
-      .otherwise(lit("fr"))
-  }
+    * language inside THEIR scan instead of joining langId's output. */
+  private def predLang(t: Column): Column = textStats(t)("pred_lang")
 
   /** Heuristic quality metrics: token count, char length, letter ratio,
     * stopword ratio, and a coarse keep/drop verdict. All ratios are
     * exact integer divisions cast to double (bit-stable cross-engine). */
   def quality(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val t = col(textCol)
-    val nTok = size(TextFns.wsTokens(t))
-    val nChar = length(t)
-    val nLetter = length(regexp_replace(t, "[^\\p{L}]", ""))
-    val nStop = TextFns.countIn(TextFns.lowerTokens(t), stopwords("en"))
-    docs.select(col(idCol).as("doc_id"),
-      nTok.as("n_tokens"), nChar.as("char_len"),
-      (nLetter.cast("double") / nChar.cast("double")).as("letter_ratio"),
-      (nStop.cast("double") / nTok.cast("double")).as("stop_ratio"))
+    val s = col("__s")
+    docs.select(col(idCol).as("doc_id"), textStats(col(textCol)).as("__s"))
+      .select(col("doc_id"),
+        s("ws_tokens").as("n_tokens"), s("chars").as("char_len"),
+        (s("letters").cast("double") / s("chars").cast("double")).as("letter_ratio"),
+        (s("en").cast("double") / s("ws_tokens").cast("double")).as("stop_ratio"))
       .withColumn("verdict",
         when(col("n_tokens") >= 5 && col("letter_ratio") >= 0.5, lit("keep"))
           .otherwise(lit("drop")))

@@ -1724,7 +1724,7 @@ object TextQueries {
     // TOKENIZER tokens (cost = words·fert_cpw DIV 100) so
     // high-fertility languages stop over-drawing a fixed training
     // budget computed over words. fert_cpw values are the vendored-BPE
-    // measurement on this corpus (graft.tools.ProfileFertility),
+    // measurement on this corpus (a since-removed profiling main),
     // applied as config — the stored-thresholds stance that keeps the
     // decision SQL-replayable.
     "q_fertility_mix" -> { (s, dir) =>
@@ -1929,7 +1929,7 @@ object TextQueries {
       // composed five-stage plan there, so the dedup/split tail and
       // every one of its AQE stages plan against a LEAF instead of
       // re-optimizing the whole gopher→cap→scrub→mix tree per stage.
-      // Measured (ProfileV3e, quiet host, sf0.1): the tail's minhash
+      // Measured (a since-removed profiling main, quiet host, sf0.1): the tail's minhash
       // pairs drop 5.6 → 0.4 s and the split 7.6 → 1.3 s — the r7
       // bench ceiling was ~11 s of driver-side re-planning, not data.
       // On a cluster this boundary is exactly where the curated corpus

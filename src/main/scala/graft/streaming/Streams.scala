@@ -1237,8 +1237,8 @@ object Streams {
     * old signatures.
     *
     * Pipeline (all stages stream-legal):
-    *  1. per-row MinHash signatures (`Dedup.rowSignatures` — a pure
-    *     Column expression, bit-identical to the batch aggregate path)
+    *  1. per-row MinHash signatures (`Dedup.rowSignatures` — a
+    *     row-local generator, bit-identical to the batch aggregate path)
     *     and band buckets: zero shuffle, scan speed;
     *  2. one stateful shuffle on (band, bucket): bounded ListState per
     *     bucket emits capped candidate pairs

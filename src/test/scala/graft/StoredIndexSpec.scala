@@ -218,4 +218,49 @@ class StoredIndexSpec extends SparkSpec {
     StoredIndex.ensure(spark, p) { builds.incrementAndGet(); slowCommit(p) }
     assert(builds.get == 1 && IndexPaths.complete(spark, p))
   }
+
+  /** Spark jobs started while `body` runs. */
+  private def jobsDuring[A](body: => A): (A, Int) = {
+    val jobs = new AtomicInteger()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.sql.graft.shim.drainListeners(spark)
+    spark.sparkContext.addSparkListener(l)
+    try {
+      val a = body
+      org.apache.spark.sql.graft.shim.drainListeners(spark)
+      (a, jobs.get)
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
+
+  test("read: a committed index's supplied schema == Spark's inference, with no job") {
+    val byName = families.map(f => f.name -> f).toMap
+    // the hot reads: BM25 postings and stats, the band index, the
+    // partitioned IVF table
+    val tables = Seq("bm25", "band", "ivf").flatMap { n =>
+      val p = fresh(s"read_$n")
+      byName(n).run(p)
+      if (n == "ivf") Seq(p) else byName(n).tables(p)
+    }
+    for (t <- tables) {
+      val inferred = spark.read.parquet(t)
+      StoredIndex.read(spark, t)
+      val (supplied, jobs) = jobsDuring(StoredIndex.read(spark, t))
+      assert(jobs === 0, s"$t: reading a known commit starts no job")
+      assert(supplied.schema === inferred.schema, t)
+      assert(rows(supplied) === rows(inferred), t)
+    }
+  }
+
+  test("read: a table rewritten at the same path is inferred afresh") {
+    val p = fresh("read_rewrite")
+    Seq((1L, "a")).toDF("doc_id", "term").write.parquet(p)
+    assert(StoredIndex.read(spark, p).columns.toSeq === Seq("doc_id", "term"))
+    Seq((2L, 3, 4.0)).toDF("doc_id", "tf", "w").write.mode("overwrite").parquet(p)
+    val again = StoredIndex.read(spark, p)
+    assert(again.schema === spark.read.parquet(p).schema)
+    assert(rows(again) === Seq("[2,3,4.0]"))
+  }
 }
