@@ -1,7 +1,11 @@
 package graft.io
 
+import java.io.FileNotFoundException
 import java.util.concurrent.ConcurrentHashMap
 
+import scala.annotation.tailrec
+
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
@@ -102,27 +106,49 @@ object StoredIndex {
     v
   }
 
-  /** Schema of each table [[read]] has inferred, with the modification
-    * time of the `_SUCCESS` marker it was inferred under. */
-  private val schemas = new ConcurrentHashMap[String, (Long, StructType)]()
+  /** Schema of each table [[read]] has inferred, with the commit key
+    * ([[commitKey]]) it was inferred under. */
+  private val schemas =
+    new ConcurrentHashMap[String, (Seq[(String, Long, Long)], StructType)]()
+
+  /** What identifies one commit of a table: the path, length and
+    * modification time of each top-level entry (`_SUCCESS` included)
+    * and, for a partitioned table, of each file in its first partition.
+    * Every Spark write names its part files after a fresh job id, so a
+    * table rewritten at the same path never repeats its key, whatever
+    * the store's timestamp resolution. None while the table carries no
+    * `_SUCCESS` marker. One listing, two for a partitioned table. */
+  private def commitKey(fs: FileSystem, dir: Path): Option[Seq[(String, Long, Long)]] = {
+    def list(d: Path) = fs.listStatus(d).toSeq.sortBy(_.getPath.getName)
+    val top = try list(dir) catch { case _: FileNotFoundException => Nil }
+    if (!top.exists(_.getPath.getName == "_SUCCESS")) None
+    else {
+      @tailrec def firstPartition(es: Seq[FileStatus]): Seq[FileStatus] =
+        es.find(e => e.isDirectory && !e.getPath.getName.startsWith("_")) match {
+          case Some(d) => firstPartition(list(d.getPath))
+          case None => es
+        }
+      val part = if (top.exists(_.isDirectory)) firstPartition(top) else Nil
+      Some((top ++ part).map(e =>
+        (e.getPath.toString, e.getLen, e.getModificationTime)))
+    }
+  }
 
   /** `spark.read.parquet(path)` of a committed index table without the
     * schema-inference job (a footer read) Spark starts for every read
     * of an unknown schema: the first read of a commit infers and
-    * remembers the schema, later reads of the SAME commit (its
-    * `_SUCCESS` marker unchanged — one `getFileStatus`) supply it. A
-    * rebuild or append rewrites the marker, so the next read infers
-    * afresh; an uncommitted table is always inferred. */
+    * remembers the schema, later reads of the SAME commit (an equal
+    * [[commitKey]]) supply it. A rebuild or append writes new part
+    * files, so the next read infers afresh; an uncommitted table is
+    * always inferred. */
   def read(spark: SparkSession, path: String): DataFrame = {
-    val marker = new org.apache.hadoop.fs.Path(path, "_SUCCESS")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val stamp =
-      if (fs.exists(marker)) fs.getFileStatus(marker).getModificationTime else -1L
-    Option(schemas.get(path)).filter(m => stamp >= 0 && m._1 == stamp) match {
+    val dir = new Path(path)
+    val key = commitKey(dir.getFileSystem(spark.sparkContext.hadoopConfiguration), dir)
+    Option(schemas.get(path)).filter(m => key.contains(m._1)) match {
       case Some((_, schema)) => spark.read.schema(schema).parquet(path)
       case None =>
         val df = spark.read.parquet(path)
-        if (stamp >= 0) schemas.put(path, (stamp, df.schema))
+        key.foreach(k => schemas.put(path, (k, df.schema)))
         df
     }
   }

@@ -76,7 +76,8 @@ object Dedup {
   }
 
   /** Signatures over pre-hashed grams ([[gramHashes]]) via the long-
-    * input native aggregate — the reference that pins the per-row
+    * input native aggregate — the signature path of
+    * [[minhashDedupPairs]], and the reference that pins the per-row
     * [[rowSignatures]] bit-equal (DedupSpec). */
   def minhashSignaturesHashed(gramHs: DataFrame, numHashes: Int): DataFrame = {
     import org.apache.spark.sql.graft.shim
@@ -102,8 +103,9 @@ object Dedup {
   /** Per-ROW MinHash signatures as one row-local generator — NO
     * aggregation, so it runs on an unbounded stream (the signature step
     * of [[graft.streaming.Streams.nearDupPairsStream]]) and on any
-    * batch slice with zero shuffle; every band operation
-    * ([[docBandBuckets]], [[minhashDedupPairs]]) signs documents here.
+    * batch slice with zero shuffle; the stored band index operations
+    * ([[docBandBuckets]]: its build, lookup and ingest) sign documents
+    * here.
     * Bit-identical to [[minhashSignaturesHashed]] (same token-hash →
     * window-combine → `xxhash64(i, h)` view chain; asserted in
     * DedupSpec), computed by one native kernel per document
@@ -172,9 +174,11 @@ object Dedup {
     *    against the bucket relation broadcasts that tiny overflow
     *    bucket list and keeps `NOT array_contains(kept, id)` members.
     * Per-bucket output (and work) stays ≤ cap²/2 + (m − cap). The
-    * aggregate and star-probe branches both read `buckets`: pass a
-    * persisted frame, or the expensive subtree below it (the
-    * signatures) runs once per branch.
+    * aggregate and star-probe branches both read `buckets`: the
+    * expensive subtree below it must end in an exchange they share
+    * (AQE computes it once, ReusedExchange — the signature aggregation
+    * in [[minhashDedupPairs]]) or be a persisted frame, or it runs once
+    * per branch.
     *
     * Returns (id_a, id_b) with id_a < id_b, NOT deduplicated across
     * buckets. */
@@ -234,20 +238,22 @@ object Dedup {
     * 16 bands × 4 rows: P(catch | J=t) = 1-(1-t^4)^16 — ≥0.9998 at
     * t=0.8, indistinguishable from 1 at the J≈0.95 dups real corpora
     * (and this testdata) contain.
-    * Persists the band buckets and the candidate list through
-    * [[Caches]] — release with `Caches.release()` after the consuming
-    * action. */
+    * Persists the candidate list through [[Caches]] — release with
+    * `Caches.release()` after the consuming action. */
   def minhashDedupPairs(docs: DataFrame, idCol: String, textCol: String,
       ngram: Int = 3, numHashes: Int = 64, bands: Int = 16,
       threshold: Double = 0.8, maxBucket: Int = 64): DataFrame = {
-    // Signature path: one per-row kernel per document — no gram
-    // strings, no gram rows, no signature-side shuffle. The buckets
-    // are persisted because the capped pair generator reads them in
-    // three branches (core pairs, overflow buckets, star probe), and
-    // with no exchange below them each branch would re-sign the corpus.
-    val buckets = Caches.persist(
-      lshBandBuckets(rowSignatures(docs, idCol, textCol, ngram, numHashes),
-        bands, numHashes / bands))
+    // Signature path: RAW (non-distinct) gram HASHES stream straight
+    // into the per-doc min-aggregate — duplicates cannot change a min,
+    // so the corpus-wide distinct shuffle is skipped entirely, and no
+    // gram strings are ever built (tokens hashed once, windows combined
+    // hash-to-hash). The only signature-side shuffle is the partial-
+    // aggregated groupBy(doc_id), one 64-long buffer per doc per map
+    // partition; the capped pair generator's branches share that
+    // exchange. (The per-row kernel would drop the shuffle but leave
+    // nothing shared below the branches, so it would need a corpus-
+    // scale persist of the buckets instead.)
+    val sigs = minhashSignaturesHashed(gramHashes(docs, idCol, textCol, ngram), numHashes)
     // candidate pairs are tiny (LSH-pruned); persisted because they
     // are consumed twice (id filter + membership join). Persist — NOT
     // checkpoint: the returned pairs frame references this table
@@ -258,7 +264,8 @@ object Dedup {
     // bands reaches the rescore several times, and the rescore's own
     // per-pair aggregation dedups for free — one exchange saved.
     val cands = Caches.persist(
-      cappedBucketPairs(buckets, Seq("band", "bucket"), "doc_id", maxBucket)
+      cappedBucketPairs(lshBandBuckets(sigs, bands, numHashes / bands),
+          Seq("band", "bucket"), "doc_id", maxBucket)
         .toDF("doc_a", "doc_b"))
     jaccardRescore(cands, docs, idCol, textCol, ngram)
       .where(col("jaccard") >= threshold)
@@ -830,10 +837,10 @@ object Dedup {
       idCol: String, textCol: String, ngram: Int = 3,
       threshold: Double = 0.8, maxBucket: Int = 64): DataFrame = {
     val idx = graft.io.StoredIndex.read(newDocs.sparkSession, indexPath)
-    val vsCorpus = newBuckets.select(col("band"), col("bucket"),
-        col("doc_id").as("n_id"))
-      .join(idx.where(col("__r") <= maxBucket)
-        .select(col("band"), col("bucket"), col("doc_id").as("c_id")),
+    val vsCorpus = Relational.hashKeyedJoin(
+        newBuckets.select(col("band"), col("bucket"), col("doc_id").as("n_id")),
+        idx.where(col("__r") <= maxBucket)
+          .select(col("band"), col("bucket"), col("doc_id").as("c_id")),
         Seq("band", "bucket"))
       .where(col("n_id") =!= col("c_id"))
       .select(least(col("n_id"), col("c_id")).as("id_a"),

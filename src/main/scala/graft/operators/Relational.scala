@@ -357,6 +357,26 @@ object Relational {
     salted.join(replicated, Seq(key, "__salt")).drop("__salt")
   }
 
+  /** Inner equi-join on the same-named `keys` whose only join key is
+    * one long, `xxhash64` of the keys; each key's own equality is then
+    * checked on the hash matches. A broadcast hash relation keyed on a
+    * single long is sized to its rows, but one keyed on a string, or on
+    * several columns that do not pack into 64 bits, holds a whole memory
+    * page (32 MiB at a 3 GB heap) until the ContextCleaner frees it,
+    * however few rows it has. The check is written
+    * `array_contains(array(r), l)`: the same truth value as `l = r`,
+    * nulls included, but not an equality the planner lifts into the
+    * join keys. Returns `left`'s columns, then `right`'s other columns;
+    * broadcast a side by passing it through `broadcast`. */
+  def hashKeyedJoin(left: DataFrame, right: DataFrame, keys: Seq[String]): DataFrame = {
+    val r = right.select(right.columns.toIndexedSeq.map(c =>
+        if (keys.contains(c)) col(c).as(s"__rk_$c") else col(c)): _*)
+      .withColumn("__rh", xxhash64(keys.map(k => col(s"__rk_$k")): _*))
+    left.join(r, xxhash64(keys.map(left(_)): _*) === r("__rh") &&
+        keys.map(k => array_contains(array(r(s"__rk_$k")), left(k))).reduce(_ && _))
+      .drop(("__rh" +: keys.map(k => s"__rk_$k")): _*)
+  }
+
   /** MERGE / upsert (SCD type 1): apply `source` changes to `target` by
     * `key` — matched rows take the source's values for `updateCols`,
     * unmatched source rows are inserted (missing target-only columns

@@ -100,19 +100,10 @@ object Retrieval {
   private def rankPostings(postings: DataFrame, stats: DataFrame,
       qterms: DataFrame, k: Int): DataFrame = {
     import org.apache.spark.sql.graft.shim
-    // the query terms join on the term's long hash, then check the term
-    // itself: a long-keyed broadcast relation is sized to its rows, a
-    // string-keyed one holds a whole memory page (32 MiB at a 3 GB
-    // heap) for a few dozen terms. `array_contains` keeps the term
-    // check out of the equi-join keys.
-    val qt = qterms.select(col("query_id"), col("term").as("__qt"),
-      xxhash64(col("term")).as("__th"))
     // every division is integral DIV (never float-divide-then-floor:
     // a correctly-rounded double can land on the wrong side of an
     // integer boundary at these magnitudes)
-    val scored = postings
-      .join(broadcast(qt), xxhash64(col("term")) === col("__th") &&
-        array_contains(array(col("__qt")), col("term")))
+    val scored = Relational.hashKeyedJoin(postings, broadcast(qterms), Seq("term"))
       .crossJoin(broadcast(stats))
       .withColumn("__rc",
         expr("(dl * 100L) DIV (total_tokens DIV n_docs)"))

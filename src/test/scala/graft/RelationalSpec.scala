@@ -214,6 +214,31 @@ class RelationalSpec extends SparkSpec {
       plain.collect().map(r => (r.getString(0), r.getLong(1))).sorted.toSeq)
   }
 
+  test("hashKeyedJoin == join on the keys, nulls included, on one long join key") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    import org.apache.spark.sql.types.LongType
+    val l = Seq((Some(1), Some("a"), 10L), (Some(1), Some("b"), 11L),
+        (None, Some("a"), 12L), (Some(2), None, 13L), (Some(2), Some("c"), 14L),
+        (Some(3), Some("c"), 15L))
+      .toDF("k1", "k2", "x")
+    val r = Seq((Some(1), Some("a"), "p"), (Some(1), Some("a"), "q"),
+        (None, Some("a"), "n"), (Some(2), None, "m"), (Some(3), Some("c"), "z"),
+        (Some(3), Some("d"), "w"))
+      .toDF("k1", "k2", "y")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("k1", "k2", "x", "y").collect().map(_.toString).toSeq.sorted
+    for ((keys, rk) <- Seq(Seq("k1", "k2") -> r, Seq("k2") -> r.drop("k1"))) {
+      val got = Relational.hashKeyedJoin(l, broadcast(rk), keys)
+      assert(rows(got) === rows(l.join(rk, keys)), keys)
+      assert(got.columns.toSeq === l.columns.toSeq :+ "y")
+      object H extends AdaptiveSparkPlanHelper
+      val joins = H.collect(got.queryExecution.executedPlan) {
+        case j: BroadcastHashJoinExec => j }
+      assert(joins.map(_.leftKeys.map(_.dataType)) === Seq(Seq(LongType)), keys)
+    }
+  }
+
   test("native as-of join == composed union+window as-of join") {
     import org.apache.spark.sql.functions._
     val ev = graft.queries.Q.events(spark, sf)

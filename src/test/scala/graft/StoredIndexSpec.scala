@@ -255,12 +255,34 @@ class StoredIndexSpec extends SparkSpec {
   }
 
   test("read: a table rewritten at the same path is inferred afresh") {
+    // the rewrite's `_SUCCESS` gets the first commit's modification
+    // time, as on a store that keeps times to the second: the new part
+    // files alone must tell the commits apart
+    val fs = new org.apache.hadoop.fs.Path(fresh("read_fs"))
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def marker(p: String) = new org.apache.hadoop.fs.Path(p, "_SUCCESS")
+    def rewrite(p: String)(write: String => Unit): Unit = {
+      val t = fs.getFileStatus(marker(p)).getModificationTime
+      write(p)
+      fs.setTimes(marker(p), t, -1L)
+      assert(fs.getFileStatus(marker(p)).getModificationTime === t)
+    }
     val p = fresh("read_rewrite")
     Seq((1L, "a")).toDF("doc_id", "term").write.parquet(p)
     assert(StoredIndex.read(spark, p).columns.toSeq === Seq("doc_id", "term"))
-    Seq((2L, 3, 4.0)).toDF("doc_id", "tf", "w").write.mode("overwrite").parquet(p)
+    rewrite(p)(Seq((2L, 3, 4.0)).toDF("doc_id", "tf", "w").write.mode("overwrite").parquet(_))
     val again = StoredIndex.read(spark, p)
     assert(again.schema === spark.read.parquet(p).schema)
     assert(rows(again) === Seq("[2,3,4.0]"))
+    // partitioned: the partition dirs keep their names across commits
+    val q = fresh("read_rewrite_part")
+    Seq((1L, 0, "a")).toDF("doc_id", "cluster", "term")
+      .write.partitionBy("cluster").parquet(q)
+    assert(StoredIndex.read(spark, q).columns.toSeq === Seq("doc_id", "term", "cluster"))
+    rewrite(q)(Seq((2L, 0, 5.0)).toDF("doc_id", "cluster", "w")
+      .write.mode("overwrite").partitionBy("cluster").parquet(_))
+    val part = StoredIndex.read(spark, q)
+    assert(part.schema === spark.read.parquet(q).schema)
+    assert(rows(part) === Seq("[2,5.0,0]"))
   }
 }
