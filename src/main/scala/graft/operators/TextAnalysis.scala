@@ -55,14 +55,17 @@ object TextAnalysis {
 
   /** Heuristic quality metrics: token count, char length, letter ratio,
     * stopword ratio, and a coarse keep/drop verdict. All ratios are
-    * exact integer divisions cast to double (bit-stable cross-engine). */
+    * exact integer divisions cast to double (bit-stable cross-engine).
+    * A ratio whose denominator is 0 is null, as DuckDB's `x / 0` is: an
+    * empty text has a null `letter_ratio`, a text without a whitespace
+    * token a null `stop_ratio`, and both get the verdict `drop`. */
   def quality(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
     val s = col("__s")
     docs.select(col(idCol).as("doc_id"), textStats(col(textCol)).as("__s"))
       .select(col("doc_id"),
         s("ws_tokens").as("n_tokens"), s("chars").as("char_len"),
-        (s("letters").cast("double") / s("chars").cast("double")).as("letter_ratio"),
-        (s("en").cast("double") / s("ws_tokens").cast("double")).as("stop_ratio"))
+        try_divide(s("letters").cast("double"), s("chars").cast("double")).as("letter_ratio"),
+        try_divide(s("en").cast("double"), s("ws_tokens").cast("double")).as("stop_ratio"))
       .withColumn("verdict",
         when(col("n_tokens") >= 5 && col("letter_ratio") >= 0.5, lit("keep"))
           .otherwise(lit("drop")))

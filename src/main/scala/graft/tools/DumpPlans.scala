@@ -102,13 +102,7 @@ object DumpPlans {
 
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession(8)
     val sb = new StringBuilder
     sb.append("# PLANS — executed physical plans of the headline queries\n\n")
     sb.append(s"Regenerate with `sbt \"runMain graft.tools.DumpPlans\"` ($sfDir,\n")

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 import graft.functions.Bpe
 
 /** One-time generator for the vendored BPE merges table
@@ -38,12 +36,7 @@ object TrainBpeTable {
     val numMerges = if (args.length > 0) args(0).toInt else 3000
     val outPath = if (args.length > 1) args(1)
       else "src/main/resources/graft/bpe_merges.txt"
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(8)
     val existing = defaultCorpus.filter(p => new java.io.File(p).isFile)
     require(existing.nonEmpty, "no corpus files found")
     val docs = spark.read.textFile(existing: _*).toDF("text")

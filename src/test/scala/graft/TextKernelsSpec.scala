@@ -216,8 +216,8 @@ class TextKernelsSpec extends SparkSpec {
   test("quality and langId == their lambda compositions on random text") {
     check(Prop.forAll(batch) { texts =>
       val df = frame(texts)
-      // quality divides by the token count: a text without one fails
-      // both forms under ANSI (next test), so it is left out here
+      // the composition divides by the token count: a text without one
+      // fails it under ANSI (next test), so it is left out here
       val scored = df.where(col("text").isNull || size(Composed.wsTokens(col("text"))) > 0)
       val q = TextAnalysis.quality(scored, "doc_id", "text")
       val ref = Composed.quality(scored, "doc_id", "text")
@@ -231,15 +231,15 @@ class TextKernelsSpec extends SparkSpec {
     })
   }
 
-  test("quality of a text without tokens fails as its composition does") {
-    for (t <- Seq("", " \t ")) {
-      val df = frame(Seq(Some(t)))
-      val errs = Seq[DataFrame => DataFrame](TextAnalysis.quality(_, "doc_id", "text"),
-          Composed.quality(_, "doc_id", "text"))
-        .map(f => intercept[org.apache.spark.SparkThrowable](
-          f(df).collect()).getCondition)
-      assert(errs === Seq("DIVIDE_BY_ZERO", "DIVIDE_BY_ZERO"))
-    }
+  test("quality of a text without tokens has null ratios and the verdict drop") {
+    val texts = Seq("", " \t ")
+    assert(sorted(TextAnalysis.quality(frame(texts.map(Some(_))), "doc_id", "text")) ===
+      Seq(Row(0L, 0, 0, null, null, "drop"), Row(1L, 0, 3, 0.0, null, "drop")))
+    // the composition it replaced divides by 0, which fails under ANSI
+    for (t <- texts)
+      assert(intercept[org.apache.spark.SparkThrowable](
+        Composed.quality(frame(Seq(Some(t))), "doc_id", "text").collect())
+        .getCondition === "DIVIDE_BY_ZERO")
   }
 
   test("quality and langId of a null text match under spark.sql.legacy.sizeOfNull") {
